@@ -62,19 +62,22 @@ def _mint_drop_tag(context, name: str) -> str:
 def _defer_drop_count(context, step_name: str, tag: str, message_fmt: str, fallback_df, fallback_pred):
     """Register a summarized drop-count event that resolves CHEAPLY.
 
-    Preferred path: count rows tagged ``DROP_STEP_COL == step_name`` in the
-    phase's materialized checkpoint (set by Pipeline.run_phase) — a pruned
-    single-column parquet scan with a pushed filter, never a re-execution
-    of the pre-filter plan.  Standalone ``Phase.run`` callers (no pipeline
-    checkpoint) fall back to counting ``fallback_pred`` over the step's
-    input plan, the old behavior."""
+    In a Pipeline the count is already known: the phase's checkpoint write
+    observed one ``count_if`` per drop tag (``context.phase_stats``), so
+    resolving costs no Spark job.  A checkpoint registered without stats
+    is counted with a pruned single-column scan of it; standalone
+    ``Phase.run`` callers (neither) fall back to counting
+    ``fallback_pred`` over the step's input plan."""
     from .constants import DROP_STEP_COL
 
     phase = context.current_phase
 
     def _count(ctx=context, phase=phase, name=step_name, tag=tag):
-        ckpt = getattr(ctx, "phase_checkpoints", {}).get(phase)
-        if ckpt is not None and DROP_STEP_COL in ckpt.columns:
+        observed = ctx.phase_stats.get(phase, {}).get("drop_tags", {})
+        ckpt = ctx.phase_checkpoints.get(phase)
+        if tag in observed:
+            dropped = observed[tag]
+        elif ckpt is not None and DROP_STEP_COL in ckpt.columns:
             dropped = ckpt.filter(F.col(DROP_STEP_COL) == tag).count()
         else:
             dropped = fallback_df.filter(fallback_pred).count()
@@ -254,7 +257,11 @@ def drop_duplicate_rows(columns=None):
 def check_unique(column, strip: bool = True, ignore_case: bool = False):
     """Assert all values of a column are unique
     (phaser/builtin_steps.py:57-86); raises ``DataErrorException`` as a
-    whole-batch error.  One aggregate job; short-circuits via ``limit(1)``."""
+    whole-batch error.  One aggregate per value, then a top-1 over the
+    duplicated groups: two Spark jobs (the aggregate's shuffle map stage
+    and the top-1), whether or not a duplicate exists.  The reported value
+    is the duplicate whose first occurrence has the lowest row number, so
+    the message is the same on every run."""
     col = _colname(column)
 
     @batch_step(internal=True)
@@ -276,9 +283,11 @@ def check_unique(column, strip: bool = True, ignore_case: bool = False):
             F.col(SWEPT_COL) if SWEPT_COL in df.columns else F.lit(False)
         )
         dup = (
-            df.filter(~F.col(DROP_COL) & ~swept).groupBy(expr.alias("k"))
-            .count()
-            .filter(F.col("count") > 1)
+            df.filter(~F.col(DROP_COL) & ~swept)
+            .groupBy(expr.alias("k"))
+            .agg(F.count(F.lit(1)).alias("n"), F.min(PHASER_ROW_NUM).alias("first"))
+            .filter(F.col("n") > 1)
+            .orderBy("first")
             .limit(1)
             .collect()
         )
@@ -289,8 +298,8 @@ def check_unique(column, strip: bool = True, ignore_case: bool = False):
         return df
 
     _check_unique.__name__ = f"check_unique_{col}"
-    # one aggregate job: partial aggregation runs on the scan tasks and the
-    # shuffle carries only (value, count) pairs — no fan-out needed
+    # partial aggregation runs on the scan tasks and the shuffle carries
+    # only (value, count, first) triples — no fan-out needed
     _check_unique.__phaser_needs_spread__ = False
     return _check_unique
 

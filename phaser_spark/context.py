@@ -80,6 +80,10 @@ class Context:
         # deferred drop-count resolvers read these instead of re-executing
         # the pre-filter plan
         self.phase_checkpoints: dict[str, DataFrame] = {}
+        # numbers each phase's checkpoint write observed (set by
+        # Pipeline.run_phase, see Pipeline.phase_stats): deferred drop
+        # counts read their tag's count here without a Spark job
+        self.phase_stats: dict[str, dict] = {}
         # named side datasets (reference "rwos", phaser/context.py:28-33)
         self.rwos: dict[str, SavableObject] = {}
         # per-(phase, step-name) sequence for DROP_STEP_COL tags: reset at
@@ -100,6 +104,15 @@ class Context:
         n = self._drop_tag_counts.get(key, 0)
         self._drop_tag_counts[key] = n + 1
         return f"{name}#{n}"
+
+    def drop_tags(self, phase: str) -> list[str]:
+        """Every DROP_STEP_COL tag minted in ``phase`` since it started."""
+        return [
+            f"{name}#{i}"
+            for (p, name), n in self._drop_tag_counts.items()
+            if p == phase
+            for i in range(n)
+        ]
 
     def reset_drop_tags(self, phase: str) -> None:
         for key in [k for k in self._drop_tag_counts if k[0] == phase]:
@@ -183,9 +196,11 @@ class Context:
         self._resolve_deferred()
         return self._driver_events
 
-    def add_event_df(self, df: DataFrame) -> None:
-        """Attach a row-level events DataFrame (columns per EVENT_SCHEMA)."""
+    def add_event_df(self, df: DataFrame) -> DataFrame:
+        """Attach a row-level events DataFrame (columns per EVENT_SCHEMA);
+        returns the attached frame."""
         self.event_dfs.append(df.select([f.name for f in EVENT_SCHEMA.fields]))
+        return self.event_dfs[-1]
 
     def events_df(self) -> DataFrame:
         out = self.spark.createDataFrame(self.driver_events or [], EVENT_SCHEMA)

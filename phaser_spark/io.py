@@ -30,6 +30,7 @@ import json
 import os
 import shutil
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -569,6 +570,7 @@ def save_parquet_sorted(
     sort_cols: list[str],
     num_files: int | None = None,
     partition_by: list[str] | None = None,
+    before_write: Callable[[DataFrame], DataFrame] | None = None,
 ) -> None:
     """Range-clustered parquet sink for data skipping (engine addition).
 
@@ -592,6 +594,11 @@ def save_parquet_sorted(
 
     Row-group skipping is verified from the written footers in
     ``tests/test_io.py::test_sorted_parquet_row_groups_are_skippable``.
+
+    ``before_write`` maps the clustered frame just before the sink.  It
+    runs after the range exchange, so an ``Observation`` attached there
+    counts each row once (observed below the exchange, the range
+    partitioner's sampling job would count rows too).
     """
     cols = [F.col(c) for c in sort_cols]
     if num_files:
@@ -599,6 +606,8 @@ def save_parquet_sorted(
     else:
         clustered = df.repartitionByRange(*cols)
     clustered = clustered.sortWithinPartitions(*cols)
+    if before_write is not None:
+        clustered = before_write(clustered)
     writer = clustered.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)

@@ -16,10 +16,17 @@ Parity target: reference ``phaser/pipeline.py`` (SURVEY.md §2.1 S5–S11, §3):
   (``phaser/pipeline.py:191-192``).
 
 Engine design: each phase builds one lazy DataFrame chain and materializes
-exactly once, at its checkpoint write (parquet with engine state; CSV/JSON
-user view for reference parity).  Events are extracted from the checkpoint
-parquet — no second computation of the phase plan, no row-level driver
-state.
+it exactly once, at its checkpoint write (parquet with engine state; CSV/JSON
+user view for reference parity).  One ``Observation`` on that write counts
+what the phase needs to know about itself (:func:`phase_stat_exprs`: rows,
+visible and dropped rows, ERROR events, row-level events, rows per drop
+tag), so the empty-output check, the fail-on-error check and the deferred
+drop counts run no Spark job of their own; the numbers stay readable as
+``Pipeline.phase_stats``.  Events are extracted from the checkpoint parquet
+— no second computation of the phase plan, no row-level driver state — and
+the report collects each phase's events once, only when the write saw some.
+A phase therefore costs its checkpoint write, one events collect when it
+has events, and the user-file save.
 """
 
 from __future__ import annotations
@@ -27,13 +34,15 @@ from __future__ import annotations
 import datetime
 import os
 import shutil
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .constants import (
     CSV_FORMAT,
     DROP_COL,
+    DROP_STEP_COL,
     ERROR_COL,
     EVENT_ERROR,
     EVENT_ROW_COL,
@@ -95,6 +104,56 @@ def extract_events(df: DataFrame, phase_name: str) -> DataFrame:
     return errors.unionByName(warnings)
 
 
+def phase_stat_exprs(drop_tags: list[str]) -> list[Column]:
+    """What a phase counts about itself: aggregates over its checkpointed
+    output, observed on the checkpoint write (see ``Pipeline.run_phase``).
+
+    ``errors`` and ``events`` count exactly what :func:`extract_events`
+    emits: ``errors`` is the ERROR-typed ``__phaser_error__`` values plus
+    the ERROR entries inside ``__phaser_warnings__``; ``events`` is every
+    row-level event.  ``drop_<i>`` counts the rows tagged ``drop_tags[i]``.
+    """
+    err, warns = F.col(ERROR_COL), F.col(WARNING_COL)
+
+    def over_warnings(per_row: Column) -> Column:
+        return F.coalesce(F.sum(F.when(warns.isNotNull(), per_row)), F.lit(0))
+
+    warned_errors = F.size(F.filter(warns, lambda w: w["type"] == EVENT_ERROR))
+    return [
+        F.count(F.lit(1)).alias("rows"),
+        F.count_if(~F.col(DROP_COL)).alias("visible"),
+        (F.count_if(err["type"] == EVENT_ERROR) + over_warnings(warned_errors)).alias(
+            "errors"
+        ),
+        (F.count_if(err.isNotNull()) + over_warnings(F.size(warns))).alias("events"),
+    ] + [
+        F.count_if(F.col(DROP_STEP_COL) == tag).alias(f"drop_{i}")
+        for i, tag in enumerate(drop_tags)
+    ]
+
+
+def _phase_stats(values: dict, drop_tags: list[str]) -> dict:
+    return {
+        "rows": values["rows"],
+        "visible": values["visible"],
+        "dropped": values["rows"] - values["visible"],
+        "errors": values["errors"],
+        "events": values["events"],
+        "drop_tags": {tag: values[f"drop_{i}"] for i, tag in enumerate(drop_tags)},
+    }
+
+
+@dataclass
+class _PhaseEvents:
+    """A phase's row-level events frame, the event count its checkpoint
+    write observed, and the rows the report collected (all of them, or
+    the first ``limit`` of a larger set)."""
+
+    frame: DataFrame
+    count: int
+    rows: list | None = None
+
+
 class Pipeline:
     """Ordered phases + I/O marshalling (reference ``phaser/pipeline.py:17-43``)."""
 
@@ -136,12 +195,24 @@ class Pipeline:
                 raise PhaserError(f"{p!r} is not a Phase or Phase subclass")
         self._init_paths: dict[str, str] = {}
         self.checkpoints: dict[str, str] = {}
+        # events frames run_phase attached, by id() (each entry holds its
+        # frame, so an id is never reused while its entry exists)
+        self._phase_events: dict[int, _PhaseEvents] = {}
         # test-compile each phase's fused stages before materializing and
         # warn on janino fallback (r11 differential sweep: an all-axes
         # phase can exceed the JVM's 64 KB method limit and silently run
         # interpreted) — False skips the probe's per-phase compile cost
         self.codegen_probe = codegen_probe
         self.check_output_collision()
+
+    @property
+    def phase_stats(self) -> dict[str, dict]:
+        """Per phase, the numbers its checkpoint write observed (in memory
+        only): ``rows``, ``visible`` and ``dropped`` rows, ``errors``
+        (ERROR events) and ``events`` (row-level events), and
+        ``drop_tags`` mapping each drop tag minted in the phase to the
+        rows it dropped."""
+        return self.context.phase_stats
 
     # -- extra sources (phaser/pipeline.py:44-56,129-155) -------------------
     def init_source(self, name: str, path: str) -> None:
@@ -250,7 +321,15 @@ class Pipeline:
             # so ordinary narrow phases never pay the probe's compile
             if codegen_weight(getattr(ph, "columns", None)) >= CODEGEN_PROBE_MIN_WEIGHT:
                 warn_if_codegen_fallback(out, f"phase {ph.name}")
-        # Materialize exactly once: the internal parquet checkpoint.
+        # Materialize exactly once: the internal parquet checkpoint, whose
+        # write also observes the phase's numbers
+        drop_tags = self.context.drop_tags(ph.name)
+        stat_exprs = phase_stat_exprs(drop_tags)
+        observation = Observation()
+
+        def observe(frame: DataFrame) -> DataFrame:
+            return frame.observe(observation, *stat_exprs)
+
         materialized = True
         internal_path = None
         part_by = getattr(ph, "checkpoint_partition_by", None)
@@ -288,7 +367,7 @@ class Pipeline:
                 else None
             )
             save_parquet_bucketed(
-                out,
+                observe(out),
                 table,
                 bucket_cols=ph.checkpoint_bucket_by,
                 num_buckets=ph.checkpoint_num_buckets,
@@ -322,13 +401,14 @@ class Pipeline:
                     sort_cols=ph.checkpoint_sort_by,
                     num_files=ph.checkpoint_num_files,
                     partition_by=part_by,
+                    before_write=observe,
                 )
             elif part_by:
-                out.write.mode("overwrite").partitionBy(*part_by).parquet(
+                observe(out).write.mode("overwrite").partitionBy(*part_by).parquet(
                     internal_path
                 )
             else:
-                out.write.mode("overwrite").parquet(internal_path)
+                observe(out).write.mode("overwrite").parquet(internal_path)
             # read back with the writer's schema so partition columns keep
             # their declared type and value, then restore column order
             out = (
@@ -349,6 +429,14 @@ class Pipeline:
                 )
             out = out.cache()
             materialized = False
+        # the write filled the observation; without one, a single
+        # aggregate over the cached frame computes the same numbers
+        values = (
+            observation.get
+            if materialized
+            else out.agg(*stat_exprs).first().asDict()
+        )
+        stats = self.context.phase_stats[ph.name] = _phase_stats(values, drop_tags)
         if materialized:
             # parquet/bucketed checkpoint written above == the numbered
             # plan is durably materialized, so inputs pinned for stable
@@ -360,10 +448,8 @@ class Pipeline:
             # streaming query) in the same session keeps its own pins
             release_pinned(self.context.pinned_inputs)
 
-        events = extract_events(out, ph.name)
-        self.context.add_event_df(events)
-        # deferred drop counts resolve against this materialized checkpoint
-        # (pruned column scan) rather than re-executing the phase plan
+        events = self.context.add_event_df(extract_events(out, ph.name))
+        self._phase_events[id(events)] = _PhaseEvents(events, stats["events"])
         self.context.phase_checkpoints[ph.name] = out
 
         visible = out.filter(~F.col(DROP_COL)).drop(*INTERNAL_COLS)
@@ -383,12 +469,15 @@ class Pipeline:
         self.save_extra_outputs()
         self.report_errors_and_warnings()
 
-        if visible.isEmpty():
+        if stats["visible"] == 0:
             raise DataException(
                 f"Phase {ph.name} produced zero rows — stopping "
                 "(reference phaser/pipeline.py:191-192)"
             )
-        if self.context.phase_has_errors(ph.name):
+        if stats["errors"] or any(
+            e["phase"] == ph.name and e["type"] == EVENT_ERROR
+            for e in self.context.driver_events
+        ):
             raise DataException(
                 f"Phase {ph.name} failed with errors; see "
                 "errors_and_warnings.txt (reference phaser/pipeline.py:198-199)"
@@ -624,6 +713,8 @@ class Pipeline:
                     # drop-count resolvers take the cheap cached-scan path
                     # instead of re-executing the pre-filter plan per batch
                     self.context.phase_checkpoints[ph.name] = out
+                    # a batch run's observed counts would shadow it
+                    self.context.phase_stats.pop(ph.name, None)
                     event_dfs.append(extract_events(out, ph.name))
                     df = out.filter(~F.col(DROP_COL)).drop(*INTERNAL_COLS)
                 write_partition(df, output_path, batch_id)
@@ -771,9 +862,8 @@ class Pipeline:
         phase.  Row-level events are truncated at ``limit`` — the full set
         stays queryable as a DataFrame (``context.events_df()``)."""
         lines = []
-        events = self.context.events_df().limit(limit).collect()
         by_phase: dict[str, list] = {}
-        for e in events:
+        for e in self._report_events(limit):
             by_phase.setdefault(e["phase"], []).append(e)
         for phase, evs in by_phase.items():
             lines.append(f"Reporting for phase {phase}")
@@ -788,6 +878,35 @@ class Pipeline:
             ) as f:
                 f.write(text)
         return text
+
+    def _report_events(self, limit: int) -> list:
+        """The rows of ``context.events_df().limit(limit).collect()``, in
+        that order: driver events, then each attached events frame.
+
+        A frame ``run_phase`` attached is collected once, by the first
+        report that reaches it, and only when its checkpoint write
+        observed events: with a plain ``collect()`` when they fit in
+        ``limit``, else its first ``limit`` rows.  The union is collected
+        instead when a frame was attached some other way, or when
+        ``limit`` exceeds what a truncated frame kept."""
+        rows = list(self.context.driver_events)
+        for frame in self.context.event_dfs:
+            if len(rows) >= limit:
+                break
+            pe = self._phase_events.get(id(frame))
+            if pe is None or (
+                pe.rows is not None and len(pe.rows) < min(pe.count, limit)
+            ):
+                return self.context.events_df().limit(limit).collect()
+            if pe.rows is None:
+                if pe.count == 0:
+                    pe.rows = []
+                elif pe.count <= limit:
+                    pe.rows = frame.collect()
+                else:
+                    pe.rows = frame.limit(limit).collect()
+            rows.extend(pe.rows)
+        return rows[:limit]
 
 
 class DagPipeline(Pipeline):
