@@ -52,35 +52,33 @@ def _mint_drop_tag(context, name: str) -> str:
     drop_duplicate_rows) would otherwise share a tag and each deferred
     resolver would count BOTH steps' drops.  The sequence lives on the
     Context keyed by (phase, name) and resets at phase start, so the tag
-    is a pure function of the step's position among same-named steps —
-    reproducible across processes (checkpoint-resume safe), unlike a
-    process-global counter.  Standalone use without a context falls back
-    to the bare name (no deferred counting happens there anyway)."""
+    is a pure function of the step's position among same-named steps:
+    every run of a phase, in any process, tags the same step the same way
+    (and ``Pipeline.phase_stats`` reports its drops under that tag),
+    unlike a process-global counter.  Standalone use without a context
+    falls back to the bare name (no deferred counting happens there
+    anyway)."""
     return context.next_drop_tag(name) if context is not None else f"{name}#0"
 
 
-def _defer_drop_count(context, step_name: str, tag: str, message_fmt: str, fallback_df, fallback_pred):
+def _defer_drop_count(context, step_name: str, tag: str, message_fmt: str, step_output):
     """Register a summarized drop-count event that resolves CHEAPLY.
 
-    In a Pipeline the count is already known: the phase's checkpoint write
-    observed one ``count_if`` per drop tag (``context.phase_stats``), so
-    resolving costs no Spark job.  A checkpoint registered without stats
-    is counted with a pruned single-column scan of it; standalone
-    ``Phase.run`` callers (neither) fall back to counting
-    ``fallback_pred`` over the step's input plan."""
+    In a Pipeline the count is already known: each phase counts one
+    ``count_if`` per drop tag (``context.phase_stats``, see
+    ``phase_stat_exprs``), so resolving costs no Spark job.  Standalone
+    ``Phase.run`` callers have no numbers and count the tag over
+    ``step_output``, the step's output plan."""
     from .constants import DROP_STEP_COL
 
     phase = context.current_phase
 
     def _count(ctx=context, phase=phase, name=step_name, tag=tag):
         observed = ctx.phase_stats.get(phase, {}).get("drop_tags", {})
-        ckpt = ctx.phase_checkpoints.get(phase)
         if tag in observed:
             dropped = observed[tag]
-        elif ckpt is not None and DROP_STEP_COL in ckpt.columns:
-            dropped = ckpt.filter(F.col(DROP_STEP_COL) == tag).count()
         else:
-            dropped = fallback_df.filter(fallback_pred).count()
+            dropped = step_output.filter(F.col(DROP_STEP_COL) == tag).count()
         if dropped:
             ctx.add_dropped_row(name, None, message_fmt.format(n=dropped), phase=phase)
 
@@ -94,8 +92,8 @@ def filter_rows(func: Callable | SparkCol, name: str = "filter_rows"):
     or a Python ``f(row_dict) -> bool`` (Arrow-batched fallback).  Filtered
     rows are MARKED dropped (``DROP_COL`` + a ``DROP_STEP_COL`` tag) rather
     than removed — the pipeline strips them from visible output at the
-    checkpoint, and the summarized DROPPED_ROW count is then read back from
-    the checkpoint itself instead of re-scanning the pre-filter input.
+    checkpoint, and the summarized DROPPED_ROW count is then read from the
+    phase's own numbers instead of re-scanning the pre-filter input.
     """
 
     @batch_step(internal=True)
@@ -151,8 +149,7 @@ def filter_rows(func: Callable | SparkCol, name: str = "filter_rows"):
             out = out.drop("__phaser_keep__")
         if context is not None:
             _defer_drop_count(
-                context, name, tag, "{n} rows dropped by filter_rows", out,
-                F.col(DROP_STEP_COL) == tag,
+                context, name, tag, "{n} rows dropped by filter_rows", out
             )
         return out
 
@@ -241,9 +238,7 @@ def drop_duplicate_rows(columns=None):
         )
         if context is not None:
             _defer_drop_count(
-                context, "drop_duplicate_rows", tag,
-                "{n} duplicate rows dropped",
-                out, F.col(DROP_STEP_COL) == tag,
+                context, "drop_duplicate_rows", tag, "{n} duplicate rows dropped", out
             )
         return out
 

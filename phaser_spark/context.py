@@ -76,22 +76,20 @@ class Context:
         self._deferred_resolvers: list = []
         # row-level event DataFrames extracted at phase checkpoints
         self.event_dfs: list[DataFrame] = []
-        # materialized phase checkpoints (set by Pipeline.run_phase):
-        # deferred drop-count resolvers read these instead of re-executing
-        # the pre-filter plan
+        # materialized phase checkpoints (set by Pipeline.run_phase)
         self.phase_checkpoints: dict[str, DataFrame] = {}
-        # numbers each phase's checkpoint write observed (set by
-        # Pipeline.run_phase, see Pipeline.phase_stats): deferred drop
-        # counts read their tag's count here without a Spark job
+        # each phase's latest numbers (set by Pipeline.run_phase and per
+        # micro-batch by Pipeline.run_stream, see Pipeline.phase_stats):
+        # deferred drop counts read their tag's count here without a
+        # Spark job
         self.phase_stats: dict[str, dict] = {}
         # named side datasets (reference "rwos", phaser/context.py:28-33)
         self.rwos: dict[str, SavableObject] = {}
         # per-(phase, step-name) sequence for DROP_STEP_COL tags: reset at
         # each phase start so the Nth same-named dropping step in a phase
-        # always tags "name#N" — deterministic across processes, which lets
-        # a FRESH process resolve deferred drop counts from a checkpoint
-        # written by a previous run (a process-global counter would drift
-        # with unrelated step construction)
+        # always tags "name#N" — the same on every run, in any process (a
+        # process-global counter would drift with unrelated step
+        # construction)
         self._drop_tag_counts: dict[tuple[str, str], int] = {}
         # DataFrames pinned (cached) for stable row numbering, scoped to
         # THIS pipeline: released by run_phase once the numbered plan is
@@ -115,8 +113,11 @@ class Context:
         ]
 
     def reset_drop_tags(self, phase: str) -> None:
+        """Start ``phase`` afresh: its tags are minted again, so the
+        numbers an earlier run counted under them no longer apply."""
         for key in [k for k in self._drop_tag_counts if k[0] == phase]:
             del self._drop_tag_counts[key]
+        self.phase_stats.pop(phase, None)
 
     # -- variables (phaser/context.py "add_variable/get") -------------------
     def add_variable(self, name: str, value) -> None:

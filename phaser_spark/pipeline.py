@@ -22,11 +22,12 @@ what the phase needs to know about itself (:func:`phase_stat_exprs`: rows,
 visible and dropped rows, ERROR events, row-level events, rows per drop
 tag), so the empty-output check, the fail-on-error check and the deferred
 drop counts run no Spark job of their own; the numbers stay readable as
-``Pipeline.phase_stats``.  Events are extracted from the checkpoint parquet
-— no second computation of the phase plan, no row-level driver state — and
-the report collects each phase's events once, only when the write saw some.
-A phase therefore costs its checkpoint write, one events collect when it
-has events, and the user-file save.
+``Pipeline.phase_stats``.  A streamed micro-batch computes the same list
+with one aggregate per phase over its cached output.  Events are extracted
+from the checkpoint parquet — no second computation of the phase plan, no
+row-level driver state — and the report collects each phase's events once,
+only when the write saw some.  A phase therefore costs its checkpoint
+write, one events collect when it has events, and the user-file save.
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ import datetime
 import os
 import shutil
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -105,8 +107,9 @@ def extract_events(df: DataFrame, phase_name: str) -> DataFrame:
 
 
 def phase_stat_exprs(drop_tags: list[str]) -> list[Column]:
-    """What a phase counts about itself: aggregates over its checkpointed
-    output, observed on the checkpoint write (see ``Pipeline.run_phase``).
+    """What a phase counts about itself: aggregates over its output,
+    observed on the checkpoint write (see ``Pipeline.run_phase``) or, for
+    a streamed micro-batch, computed over the phase's cached output.
 
     ``errors`` and ``events`` count exactly what :func:`extract_events`
     emits: ``errors`` is the ERROR-typed ``__phaser_error__`` values plus
@@ -145,12 +148,12 @@ def _phase_stats(values: dict, drop_tags: list[str]) -> dict:
 
 @dataclass
 class _PhaseEvents:
-    """A phase's row-level events frame, the event count its checkpoint
-    write observed, and the rows the report collected (all of them, or
-    the first ``limit`` of a larger set)."""
+    """An attached row-level events frame, its event count (``None`` while
+    unknown) and the rows the report collected (all of them, or the first
+    ``limit`` of a larger set)."""
 
     frame: DataFrame
-    count: int
+    count: int | None = None
     rows: list | None = None
 
 
@@ -195,8 +198,9 @@ class Pipeline:
                 raise PhaserError(f"{p!r} is not a Phase or Phase subclass")
         self._init_paths: dict[str, str] = {}
         self.checkpoints: dict[str, str] = {}
-        # events frames run_phase attached, by id() (each entry holds its
-        # frame, so an id is never reused while its entry exists)
+        # attached events frames the report has seen or whose count is
+        # known, by id() (each entry holds its frame, so an id is never
+        # reused while its entry exists)
         self._phase_events: dict[int, _PhaseEvents] = {}
         # test-compile each phase's fused stages before materializing and
         # warn on janino fallback (r11 differential sweep: an all-axes
@@ -271,6 +275,15 @@ class Pipeline:
         return load_any(self.spark, source, None)
 
     def run(self, source: str | DataFrame | None = None) -> DataFrame:
+        df = self._start_run(source)
+        for ph in self.phase_instances:
+            df = self.run_phase(ph, df)
+        return df
+
+    def _start_run(self, source: str | DataFrame | None) -> DataFrame:
+        """What every run does before its first phase: check the source,
+        prepare the working dir, validate extra sources, load the source
+        and write ``source_copy``.  Returns the loaded source."""
         self.source = source if source is not None else self.source
         if self.source is None:
             raise PhaserError("Pipeline needs a source")
@@ -288,8 +301,6 @@ class Pipeline:
         if self.working_dir:
             src_copy = os.path.join(self.working_dir, f"source_copy.{self.save_format}")
             save_any(self._source_copy_frame(df), src_copy, self.save_format)
-        for ph in self.phase_instances:
-            df = self.run_phase(ph, df)
         return df
 
     def _source_copy_frame(self, df: DataFrame) -> DataFrame:
@@ -333,20 +344,22 @@ class Pipeline:
         materialized = True
         internal_path = None
         part_by = getattr(ph, "checkpoint_partition_by", None)
-        if part_by:
-            missing = [c for c in part_by if c not in out.columns]
+        for layout in (
+            "checkpoint_partition_by", "checkpoint_bucket_by", "checkpoint_sort_by"
+        ):
+            missing = [c for c in getattr(ph, layout, None) or [] if c not in out.columns]
             if missing:
                 raise PhaserError(
-                    f"Phase {ph.name}: checkpoint_partition_by columns "
-                    f"{missing} not in phase output"
+                    f"Phase {ph.name}: {layout} columns {missing} not in phase "
+                    f"output {sorted(set(out.columns) - set(INTERNAL_COLS))}"
                 )
-            if ph.checkpoint_bucket_by:
-                raise PhaserError(
-                    f"Phase {ph.name}: checkpoint_partition_by and "
-                    "checkpoint_bucket_by cannot combine (the bucketed "
-                    "checkpoint is a catalog table; partition the bucketed "
-                    "table externally if both layouts are needed)"
-                )
+        if part_by and ph.checkpoint_bucket_by:
+            raise PhaserError(
+                f"Phase {ph.name}: checkpoint_partition_by and "
+                "checkpoint_bucket_by cannot combine (the bucketed "
+                "checkpoint is a catalog table; partition the bucketed "
+                "table externally if both layouts are needed)"
+            )
         if ph.checkpoint_bucket_by:
             # Bucketed checkpoint: write a catalog-registered bucketed
             # table so downstream joins/aggs on the bucket key read a
@@ -354,12 +367,6 @@ class Pipeline:
             # tests/test_plans.py::test_bucketed_checkpoint_*).  The
             # catalog entry is what carries the bucketing metadata; a
             # plain .parquet() re-read would forget it.
-            missing = [c for c in ph.checkpoint_bucket_by if c not in out.columns]
-            if missing:
-                raise PhaserError(
-                    f"Phase {ph.name}: checkpoint_bucket_by columns {missing} "
-                    f"not in phase output {sorted(set(out.columns) - set(INTERNAL_COLS))}"
-                )
             table = self._checkpoint_table_name(ph)
             internal_path = (
                 os.path.join(self.working_dir, f".{ph.name}_state.bucketed")
@@ -383,15 +390,6 @@ class Pipeline:
             # moves partition columns to the end of the schema
             written_schema, written_cols = out.schema, out.columns
             if ph.checkpoint_sort_by:
-                missing = [
-                    c for c in ph.checkpoint_sort_by if c not in out.columns
-                ]
-                if missing:
-                    raise PhaserError(
-                        f"Phase {ph.name}: checkpoint_sort_by columns "
-                        f"{missing} not in phase output "
-                        f"{sorted(set(out.columns) - set(INTERNAL_COLS))}"
-                    )
                 # range-clustered checkpoint: row groups carry near-disjoint
                 # min/max ranges on the sort columns, so downstream
                 # predicates on them skip row groups at scan time
@@ -529,9 +527,15 @@ class Pipeline:
         batch partitions in the output table itself (never from driver
         memory, which a restart would reset).
 
+        Each phase's per-batch numbers come from one aggregate over its
+        cached output: the :func:`phase_stat_exprs` a batch run observes on
+        its checkpoint write, plus the numbering high-water mark.  They
+        decide whether the batch failed, resolve the deferred drop counts
+        without a Spark job, and stay readable as ``Pipeline.phase_stats``,
+        which holds the latest micro-batch's numbers.
+
         Driver memory is bounded for continuous runs: per-batch caches are
-        unpersisted after the write, deferred drop-count events are
-        resolved while the batch is still cached, and — when
+        unpersisted after the write, and — when
         ``events_path`` is given — row-level and driver events flush to a
         parquet events table per batch instead of accumulating on the
         driver.  Without ``events_path``, row-level events are retained on
@@ -701,56 +705,55 @@ class Pipeline:
             batch_pins: list[DataFrame] = []
             caches: list[DataFrame] = []
             try:
-                numbered = with_row_numbers(
+                df = with_row_numbers(
                     batch_df, start=state["next_start"], cache=True, pins=batch_pins
                 )
-                df = numbered
-                event_dfs: list[DataFrame] = []
-                for ph in self.phase_instances:
-                    out = ph.run(df).cache()
-                    caches.append(out)
-                    # register as the phase's checkpoint so deferred
-                    # drop-count resolvers take the cheap cached-scan path
-                    # instead of re-executing the pre-filter plan per batch
-                    self.context.phase_checkpoints[ph.name] = out
-                    # a batch run's observed counts would shadow it
-                    self.context.phase_stats.pop(ph.name, None)
-                    event_dfs.append(extract_events(out, ph.name))
-                    df = out.filter(~F.col(DROP_COL)).drop(*INTERNAL_COLS)
-                write_partition(df, output_path, batch_id)
                 # numbering high-water mark over EVERY phase's full output
                 # (dropped rows included): a row dropped in phase k is
-                # filtered out before phase k+1 runs, so the LAST cache
+                # filtered out before phase k+1 runs, so the LAST phase
                 # alone would miss its number and the next batch would
                 # reuse it — even though its DROPPED_ROW event (and the
                 # restart probe over the events table) still refers to it.
-                # Later caches are still needed: batch steps may ADD rows
-                # numbered max+1 that exist in no earlier cache.
+                # Later phases count too: batch steps may ADD rows
+                # numbered max+1 that exist in no earlier phase.
                 his = []
-                for hi_src in caches if caches else [numbered]:
-                    h = hi_src.agg(SF.max(PHASER_ROW_NUM)).first()[0]
-                    if h is not None:
-                        his.append(int(h))
+                batch_events: list[_PhaseEvents] = []
+                errors = 0
+                for ph in self.phase_instances:
+                    out = ph.run(df).cache()
+                    caches.append(out)
+                    drop_tags = self.context.drop_tags(ph.name)
+                    exprs = phase_stat_exprs(drop_tags)
+                    exprs.append(SF.max(PHASER_ROW_NUM).alias("max_row"))
+                    values = out.agg(*exprs).first().asDict()
+                    stats = _phase_stats(values, drop_tags)
+                    self.context.phase_stats[ph.name] = stats
+                    his.append(values["max_row"])
+                    errors += stats["errors"]
+                    batch_events.append(
+                        _PhaseEvents(extract_events(out, ph.name), stats["events"])
+                    )
+                    df = out.filter(~F.col(DROP_COL)).drop(*INTERNAL_COLS)
+                if not caches:
+                    his.append(df.agg(SF.max(PHASER_ROW_NUM)).first()[0])
+                write_partition(df, output_path, batch_id)
+                his = [h for h in his if h is not None]
                 if his:
-                    state["next_start"] = max(his) + 1
+                    state["next_start"] = int(max(his)) + 1
                 state["last_batch"] = batch_id
-                # resolve deferred drop-count events NOW, while the phase
-                # caches backing them are still alive
+                # resolve deferred drop-count events from the numbers above
                 self.context._resolve_deferred()
-                ev = None
-                for e in event_dfs:
-                    ev = e if ev is None else ev.unionByName(e)
                 # batch-mode parity probe BEFORE any mode branch clears
                 # driver events: a phase whose collected errors would abort
                 # run_phase must also fail (and thereby stop) the stream,
                 # not silently keep writing rows carrying errors
-                has_errors = any(
+                has_errors = errors > 0 or any(
                     e["type"] == EVENT_ERROR for e in self.context._driver_events
-                ) or (
-                    ev is not None
-                    and not ev.filter(F.col("type") == EVENT_ERROR).isEmpty()
                 )
-                if events_path is not None and ev is not None:
+                if events_path is not None and batch_events:
+                    ev = reduce(
+                        DataFrame.unionByName, [pe.frame for pe in batch_events]
+                    )
                     driver_ev = self.context._driver_events
                     if driver_ev:
                         ev = ev.unionByName(
@@ -759,13 +762,17 @@ class Pipeline:
                         self.context._driver_events = []
                     write_partition(ev, events_path, batch_id)
                 elif available_now:
-                    # finite drain: retain for batch-parity reporting.
-                    # localCheckpoint (not cache): the lineage reads this
-                    # batch's DataFrame, which is invalid once this
-                    # foreachBatch call returns — a lost cached block
-                    # would recompute from a dead plan
-                    for e in event_dfs:
-                        self.context.add_event_df(e.localCheckpoint(eager=True))
+                    # finite drain: retain for batch-parity reporting, with
+                    # the count the report needs.  localCheckpoint (not
+                    # cache): the lineage reads this batch's DataFrame,
+                    # which is invalid once this foreachBatch call returns
+                    # — a lost cached block would recompute from a dead plan
+                    for pe in batch_events:
+                        if pe.count:
+                            pe.frame = self.context.add_event_df(
+                                pe.frame.localCheckpoint(eager=True)
+                            )
+                            self._phase_events[id(pe.frame)] = pe
                 else:
                     # continuous mode without an events table: nothing will
                     # ever read these; cap instead of leaking driver heap
@@ -782,8 +789,6 @@ class Pipeline:
                 # also on failure: Structured Streaming retries the batch,
                 # and every leaked cache/pin from a failed attempt would
                 # stay in executor storage for the stream's lifetime
-                for ph in self.phase_instances:
-                    self.context.phase_checkpoints.pop(ph.name, None)
                 for c in caches:
                     c.unpersist()
                 from .lineage import release_pinned
@@ -883,28 +888,28 @@ class Pipeline:
         """The rows of ``context.events_df().limit(limit).collect()``, in
         that order: driver events, then each attached events frame.
 
-        A frame ``run_phase`` attached is collected once, by the first
-        report that reaches it, and only when its checkpoint write
-        observed events: with a plain ``collect()`` when they fit in
-        ``limit``, else its first ``limit`` rows.  The union is collected
-        instead when a frame was attached some other way, or when
-        ``limit`` exceeds what a truncated frame kept."""
+        A frame is collected by the first report that reaches it: not at
+        all when its known event count is 0, with a plain ``collect()``
+        when the count is known and fits in ``limit``, else its first
+        ``limit`` rows.  The rows are kept, so a later report collects the
+        frame again only when it needs more rows than a truncated collect
+        kept.  A frame attached outside ``run_phase`` and ``run_stream``
+        has an unknown count until a collect comes back short."""
         rows = list(self.context.driver_events)
         for frame in self.context.event_dfs:
             if len(rows) >= limit:
                 break
-            pe = self._phase_events.get(id(frame))
-            if pe is None or (
-                pe.rows is not None and len(pe.rows) < min(pe.count, limit)
-            ):
-                return self.context.events_df().limit(limit).collect()
-            if pe.rows is None:
+            pe = self._phase_events.setdefault(id(frame), _PhaseEvents(frame))
+            wanted = limit if pe.count is None else min(limit, pe.count)
+            if pe.rows is None or len(pe.rows) < wanted:
                 if pe.count == 0:
                     pe.rows = []
-                elif pe.count <= limit:
+                elif pe.count is not None and pe.count <= limit:
                     pe.rows = frame.collect()
                 else:
                     pe.rows = frame.limit(limit).collect()
+                    if len(pe.rows) < limit:
+                        pe.count = len(pe.rows)
             rows.extend(pe.rows)
         return rows[:limit]
 
@@ -1073,24 +1078,7 @@ class DagPipeline(Pipeline):
             self.context.set_source(obj)
 
     def run(self, source: str | DataFrame | None = None) -> DataFrame:
-        self.source = source if source is not None else self.source
-        if self.source is None:
-            raise PhaserError("Pipeline needs a source")
-        if self.working_dir:
-            os.makedirs(self.working_dir, exist_ok=True)
-            self.cleanup_working_dir()
-        self.validate_sources()
-        src = (
-            self.source
-            if isinstance(self.source, DataFrame)
-            else self.load(self.source)
-        )
-        if self.working_dir:
-            save_any(
-                self._source_copy_frame(src),
-                os.path.join(self.working_dir, f"source_copy.{self.save_format}"),
-                self.save_format,
-            )
+        src = self._start_run(source)
         outputs: dict[str, DataFrame] = {}
         for pname in self._dag_order:
             ph = self._dag_instances[pname]

@@ -1,15 +1,17 @@
 """Mechanically refresh the `file.py:NN` anchors in COVERAGE.md.
 
 Anchors drift every time a file above them grows (the round-5 audit found
-several stale ones).  This script rewrites every anchor of the form
+several stale ones).  Every anchor has the form
 
     `phaser_spark/<path>.py:<line>` `<name>`
 
-where `<name>` names a def/class in that file: the line number is replaced
-with the current location of ``def <name>`` / ``class <name>`` (for dotted
-names like ``Phase.load_data`` the last component is looked up).  Anchors
-without a trailing backticked name, or with multi-line lists (``:118,124``),
-are left untouched — they can't be resolved mechanically.
+where `<name>` names a def, a class or a module-level assignment in that
+file: the line number is replaced with the current location of
+``def <name>`` / ``class <name>`` / ``<name> =`` (for dotted names like
+``Phase.load_data`` the last component is looked up).  Any other `.py:NN`
+anchor (no trailing backticked name, a `:a,b` list, or a path outside
+phaser_spark/) cannot be tracked, so the script reports it and
+``--check`` fails on it.
 
 Usage:
     python tests/regen_coverage_anchors.py            # rewrite in place
@@ -34,9 +36,12 @@ ANCHOR = re.compile(
 
 
 def locate(path: str, name: str) -> int | None:
-    """Line number (1-based) of ``def name`` / ``class name`` in path."""
-    target = name.split(".")[-1]
-    pat = re.compile(rf"^\s*(async\s+)?(def|class)\s+{re.escape(target)}\b")
+    """Line number (1-based) of ``def name`` / ``class name`` / a
+    module-level ``name =`` in path."""
+    target = re.escape(name.split(".")[-1])
+    pat = re.compile(
+        rf"^(\s*(async\s+)?(def|class)\s+{target}\b|{target}\s*[:=])"
+    )
     if path.startswith("ops/"):
         path = "phaser_spark/" + path
     full = os.path.join(ROOT, path)
@@ -71,42 +76,29 @@ def main() -> int:
         return f"`{path}:{new}` `{name}`"
 
     updated = ANCHOR.sub(sub, text)
-
-    # Second pass: anchors with NO trailing `name` — resolve from the other
-    # backticked identifiers on the same table row (e.g. the capability
-    # cell's `filter_rows`).  Rewrites only when exactly one identifier on
-    # the row resolves to a def/class in the anchored file; ambiguous rows
-    # (two identifiers at different lines) are left alone.
-    BARE = re.compile(
-        r"`(?P<path>(?:phaser_spark|ops)/[\w/]+\.py):(?P<line>\d+)`(?!\s*`)"
-    )
-    IDENT = re.compile(r"`([A-Za-z_][\w.]*)`")
-
-    def fix_line(line: str) -> str:
-        def sub_bare(m: re.Match) -> str:
-            path, old = m.group("path"), int(m.group("line"))
-            hits = {
-                n
-                for name in IDENT.findall(line)
-                if (n := locate(path, name)) is not None
-            }
-            if len(hits) != 1:
-                return m.group(0)
-            new = hits.pop()
-            if new != old:
-                changes.append((path, "(from row)", old, new))
-            return f"`{path}:{new}`"
-
-        return BARE.sub(sub_bare, line)
-
-    updated = "\n".join(fix_line(l) for l in updated.split("\n"))
+    # any other `....py:NN` (or `:a,b`) anchor has no name or lies
+    # outside phaser_spark/, so nothing above can track it
+    nameless = [
+        m.group(0)
+        for m in re.finditer(r"`[\w/.]+\.py:\d[\d,]*`", updated)
+        if not ANCHOR.match(updated, m.start())
+    ]
     for path, name, old, new in changes:
         print(f"  {path} `{name}`: {old} -> {new}")
     for path, name in missing:
         print(f"  UNRESOLVED: {path} `{name}` (no def/class found)", file=sys.stderr)
+    for anchor in nameless:
+        print(
+            f"  UNTRACKED: {anchor} (needs a phaser_spark/ or ops/ path "
+            "and a trailing `name`)",
+            file=sys.stderr,
+        )
     if check:
-        if changes or missing:
-            print(f"{len(changes)} stale anchor(s), {len(missing)} unresolved")
+        if changes or missing or nameless:
+            print(
+                f"{len(changes)} stale anchor(s), {len(missing)} unresolved, "
+                f"{len(nameless)} untracked"
+            )
             return 1
         print("anchors up to date")
         return 0
@@ -116,7 +108,7 @@ def main() -> int:
         print(f"rewrote {len(changes)} anchor(s)")
     else:
         print("anchors up to date")
-    return 1 if missing else 0
+    return 1 if missing or nameless else 0
 
 
 if __name__ == "__main__":

@@ -142,36 +142,30 @@ def test_filter_rows_errored_row_visibility(spark):
         assert len(evs2) == 1 and "1 rows dropped" in evs2[0]["message"]
 
 
-def test_drop_count_resolves_from_checkpoint_not_rescan(spark):
-    # when the pipeline has materialized a checkpoint, the summarized drop
-    # count must come from it — the fallback (a re-execution of the step's
-    # input plan) is a None sentinel here and would raise if touched
+def test_drop_count_resolves_from_phase_stats_not_rescan(spark):
+    # when the phase has counted its drop tags, the summarized drop count
+    # must come from those numbers — the fallback (a re-execution of the
+    # step's output plan) is a None sentinel here and would raise if touched
     from phaser_spark.builtin_steps import _defer_drop_count
-    from phaser_spark.constants import DROP_STEP_COL
 
     ctx = Context(spark=spark)
     ctx.current_phase = "P"
-    ckpt = spark.createDataFrame(
-        [("a", "filter_rows#0"), ("b", None), ("c", "filter_rows#0"),
-         ("d", "filter_rows#1")],  # a SECOND same-named step's drops: not counted
-        f"k string, {DROP_STEP_COL} string",
-    )
-    ctx.phase_checkpoints["P"] = ckpt
+    # a SECOND same-named step's drops (filter_rows#1) are not counted
+    ctx.phase_stats["P"] = {"drop_tags": {"filter_rows#0": 2, "filter_rows#1": 1}}
     _defer_drop_count(
         ctx, "filter_rows", "filter_rows#0", "{n} rows dropped by filter_rows",
-        None, None,  # fallback sentinels: touching them would raise
+        None,  # fallback sentinel: touching it would raise
     )
     evs = [e for e in ctx.driver_events if e["type"] == "DROPPED_ROW"]
     assert len(evs) == 1 and "2 rows dropped" in evs[0]["message"]
 
 
 def test_drop_tags_deterministic_across_fresh_process(spark, tmp_path):
-    """Checkpoint-resume contract: tags are a pure function of step order
-    within the phase, so a FRESH process (here: a fresh Context) re-mints
-    the identical tags and can resolve deferred drop counts from a
-    checkpoint parquet written by the previous run."""
+    """Tags are a pure function of step order within the phase, so a
+    FRESH process (here: a fresh Context) re-mints the identical tags —
+    the ones the previous run wrote to its checkpoint and counted in
+    ``phase_stats``."""
     from phaser_spark import Phase, Pipeline
-    from phaser_spark.builtin_steps import _defer_drop_count
     from phaser_spark.constants import DROP_STEP_COL
 
     wd = str(tmp_path / "wd")
@@ -193,19 +187,15 @@ def test_drop_tags_deterministic_across_fresh_process(spark, tmp_path):
         for r in spark.read.parquet(ckpt_path).select(DROP_STEP_COL).collect()
     }
     assert written == {"lo#0", "lo#1", None}
+    assert pipe.phase_stats["P"]["drop_tags"] == {"lo#0": 1, "lo#1": 2}
 
     # "process 2": fresh Context (no shared counter state) minting the same
-    # phase's tags must reproduce them, and a deferred count registered
-    # against the re-read checkpoint must resolve from disk
+    # phase's tags must reproduce them
     ctx2 = Context(spark=spark)
     ctx2.current_phase = "P"
     ctx2.reset_drop_tags("P")
     t0, t1 = ctx2.next_drop_tag("lo"), ctx2.next_drop_tag("lo")
     assert (t0, t1) == ("lo#0", "lo#1")
-    ctx2.phase_checkpoints["P"] = spark.read.parquet(ckpt_path)
-    _defer_drop_count(ctx2, "lo", t1, "{n} rows dropped by filter_rows", None, None)
-    evs = [e for e in ctx2.driver_events if e["type"] == "DROPPED_ROW"]
-    assert len(evs) == 1 and "2 rows dropped" in evs[0]["message"]
 
 
 def test_flatten_column_deep(spark):

@@ -1,8 +1,9 @@
 """COVERAGE.md anchor freshness: the file:line pointers the parity audit
 relies on must track the code.  regen_coverage_anchors resolves every
-anchor that names (or whose table row names) a def/class; this guard
-fails the fast tier as soon as one drifts, so the doc can never go stale
-again (round-5 audit found 19 stale anchors)."""
+anchor by the def, class or module-level name it carries; this guard
+fails the fast tier as soon as one drifts, or as soon as an anchor
+carries no name to track it by, so the doc can never go stale again
+(round-5 audit found 19 stale anchors)."""
 import subprocess
 import sys
 import os
@@ -39,9 +40,9 @@ def _check(doc_path):
 
 
 def test_check_catches_drifted_nameless_anchor(tmp_path):
-    """A bare `file:NN` anchor (no trailing name) whose table row carries a
-    resolvable identifier must trip --check when NN drifts — the O1/O2/O3/P4
-    rows went stale silently before the row-identifier pass existed."""
+    """A bare `file:NN` anchor (no trailing name) trips --check — the
+    O1/O2/O3/P4 rows went stale silently while such anchors were
+    tolerated."""
     doc = tmp_path / "doc.md"
     doc.write_text(
         "| P4 | `filter_rows` + summarized DROPPED_ROW | "
@@ -51,15 +52,25 @@ def test_check_catches_drifted_nameless_anchor(tmp_path):
     assert proc.returncode == 1 and "stale anchor" in proc.stdout
 
 
-def test_check_passes_on_current_nameless_anchor(tmp_path):
+def test_check_rejects_current_nameless_anchor(tmp_path):
+    """Even at today's line, a nameless anchor (or a `:a,b` list) fails
+    --check: nothing could move it when the file changes.  The same
+    anchor with its name passes."""
     import re
 
     src = open(os.path.join(ROOT, "phaser_spark", "builtin_steps.py")).readlines()
     line = next(i for i, l in enumerate(src, 1) if re.match(r"^def filter_rows\b", l))
     doc = tmp_path / "doc.md"
+    for anchor in (f"{line}`", f"{line},{line}`"):
+        doc.write_text(
+            "| P4 | `filter_rows` + summarized DROPPED_ROW | "
+            f"`phaser_spark/builtin_steps.py:{anchor} | tests | q |\n"
+        )
+        proc = _check(str(doc))
+        assert proc.returncode == 1 and "1 untracked" in proc.stdout, anchor
     doc.write_text(
-        "| P4 | `filter_rows` + summarized DROPPED_ROW | "
-        f"`phaser_spark/builtin_steps.py:{line}` | tests | q |\n"
+        "| P4 | summarized DROPPED_ROW | "
+        f"`phaser_spark/builtin_steps.py:{line}` `filter_rows` | tests | q |\n"
     )
     proc = _check(str(doc))
     assert proc.returncode == 0, proc.stdout + proc.stderr

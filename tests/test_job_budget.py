@@ -1,17 +1,20 @@
-"""Spark-job budget of a small ``Pipeline.run``.
+"""Spark-job budgets of a small ``Pipeline.run`` and ``Pipeline.run_stream``.
 
-A phase should cost its checkpoint write (which also observes the
+A batch phase should cost its checkpoint write (which also observes the
 phase's numbers), one events collect when it has events, and the
-user-file save, plus whatever its own steps need.  This test runs a
-3-phase pipeline under one job group and pins the exact number of Spark
-jobs, so a change that adds a bookkeeping job per phase shows up here
-rather than in a benchmark.
+user-file save, plus whatever its own steps need.  A streamed phase
+should cost one aggregate over its cached output per micro-batch (the
+same numbers), plus the batch's output and events writes.  These tests
+pin the exact number of Spark jobs, so a change that adds a bookkeeping
+job per phase shows up here rather than in a benchmark.
 
-Changing the count deliberately: run this test, take the count from the
+Changing a count deliberately: run the test, take the count from the
 failure message, check with the Spark UI or an event log which jobs
-appeared or went away, then update ``JOB_BUDGET`` and say why in
-CHANGES.md."""
+appeared or went away, then update ``JOB_BUDGET`` or
+``STREAM_JOB_BUDGET`` and say why in CHANGES.md."""
+import glob
 import os
+import shutil
 
 from pyspark.sql import functions as F
 
@@ -25,8 +28,10 @@ from phaser_spark import (
     filter_rows,
     row_step,
 )
+from phaser_spark.constants import EVENT_DROPPED_ROW, PHASER_ROW_NUM
 
 JOB_BUDGET = 28
+STREAM_JOB_BUDGET = 48
 
 GROUP = "phaser-job-budget"
 
@@ -83,5 +88,99 @@ def test_pipeline_run_job_budget(spark, tmp_path):
     assert sum(stats["trim"]["drop_tags"].values()) > 0
     assert jobs == JOB_BUDGET, (
         f"Pipeline.run took {jobs} Spark jobs, budget {JOB_BUDGET} "
+        "(see the module docstring to change it deliberately)"
+    )
+
+
+def _stream_phases():
+    # each phase: a WARN column, a DROP_ROW column and a filter_rows
+    contract = Phase(
+        name="contract",
+        columns=[
+            IntColumn("qty", on_error=ON_ERROR_WARN),
+            IntColumn("price", on_error=ON_ERROR_DROP_ROW),
+        ],
+        steps=[filter_rows(F.col("id") % 5 != 0)],
+    )
+    trim = Phase(
+        name="trim",
+        columns=[
+            IntColumn("a", on_error=ON_ERROR_WARN),
+            IntColumn("b", on_error=ON_ERROR_DROP_ROW),
+        ],
+        steps=[filter_rows(F.col("id") % 3 != 0)],
+    )
+    return [contract, trim]
+
+
+def _stream_row(i):
+    return (
+        i,
+        "many" if i % 6 == 0 else str(i),
+        "free" if i % 7 == 0 else str(i),
+        "x" if i % 4 == 0 else str(i),
+        "y" if i % 11 == 0 else str(i),
+    )
+
+
+def _last_job_id(sc, group):
+    # one single-partition count is one job; its id brackets the jobs
+    # around it (job ids are sequential per SparkContext, whatever thread
+    # or job group runs them)
+    sc.setJobGroup(group, "job budget probe")
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_stream_job_budget(spark, tmp_path):
+    """Three ``available_now`` micro-batches through two phases.  The
+    stream's thread sets its own job group, so the jobs are counted as
+    the distance between two probe jobs' ids."""
+    schema = "id long, qty string, price string, a string, b string"
+    src = os.path.join(str(tmp_path), "in")
+    os.makedirs(src)
+    batches = [range(1, 13), range(13, 25), range(25, 37)]
+    for n, ids in enumerate(batches, 1):
+        stage = os.path.join(str(tmp_path), f"stage{n}")
+        rows = [_stream_row(i) for i in ids]
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(stage)
+        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
+        shutil.move(part, os.path.join(src, f"b{n}.parquet"))
+    out_dir = os.path.join(str(tmp_path), "out")
+    pipe = Pipeline(phases=_stream_phases(), spark=spark)
+    stream = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    )
+    sc = spark.sparkContext
+    before = _last_job_id(sc, "phaser-stream-budget-before")
+    pipe.run_stream(
+        stream, out_dir, checkpoint_dir=os.path.join(str(tmp_path), "ckpt")
+    )
+    jobs = _last_job_id(sc, "phaser-stream-budget-after") - before - 1
+
+    # the stream did what the budget assumes: each batch numbers on from
+    # the previous one (dropped rows included), and each phase's filter
+    # reports its own drops per batch
+    kept = [i for i in range(1, 37) if i % 7 and i % 5 and i % 11 and i % 3]
+    got = spark.read.parquet(out_dir).collect()
+    assert sorted((r["id"], r[PHASER_ROW_NUM]) for r in got) == [(i, i) for i in kept]
+    want = []
+    for ids in batches:
+        first = [i for i in ids if i % 7 and i % 5 == 0]
+        second = [i for i in ids if i % 7 and i % 5 and i % 11 and i % 3 == 0]
+        want += [("contract", len(first)), ("trim", len(second))]
+    summaries = sorted(
+        (e["phase"], int(e["message"].split()[0]))
+        for e in pipe.context.driver_events
+        if e["type"] == EVENT_DROPPED_ROW and e["row_num"] is None
+    )
+    assert summaries == sorted(w for w in want if w[1])
+    assert jobs == STREAM_JOB_BUDGET, (
+        f"run_stream took {jobs} Spark jobs, budget {STREAM_JOB_BUDGET} "
         "(see the module docstring to change it deliberately)"
     )

@@ -217,7 +217,7 @@ def test_report_matches_union_collect(spark, tmp_path):
     assert on_disk == _format(pipe.context.events_df().collect())
 
 
-def test_report_limit_above_cached_cap_falls_back_to_union(spark, tmp_path):
+def test_report_limit_above_cached_cap_recollects_truncated_frames(spark, tmp_path):
     class SmallCap(Pipeline):
         # every report the run makes keeps at most 4 rows per phase
         def report_errors_and_warnings(self, limit: int = 4) -> str:
@@ -236,11 +236,32 @@ def test_report_limit_above_cached_cap_falls_back_to_union(spark, tmp_path):
         return events_df()
 
     pipe.context.events_df = counting_events_df
+    # a larger limit re-collects the truncated frames, never the union
     want = _format(events_df().limit(50).collect())
     assert pipe.report_errors_and_warnings(limit=50) == want
-    assert unions == [1]
-    # within the cap the cached rows serve the report: no union collect
     assert pipe.report_errors_and_warnings(limit=4) == _format(
         events_df().limit(4).collect()
     )
-    assert unions == [1]
+    assert unions == []
+
+
+def test_report_reads_frames_attached_outside_run_phase(spark):
+    """A frame attached by hand has no known count: the report collects
+    its first ``limit`` rows, then all of them once a limit exceeds what
+    it kept, and never collects the union."""
+    from phaser_spark.context import EVENT_SCHEMA
+
+    pipe = Pipeline(phases=[], spark=spark)
+    rows = [("hand", i, "WARNING", "s", f"w{i}") for i in range(1, 8)]
+    pipe.context.add_event_df(spark.createDataFrame(rows, EVENT_SCHEMA))
+    pipe.context.add_warning("driver side", phase="hand")
+
+    def no_union():
+        raise AssertionError("the report collected the union")
+
+    events_df = pipe.context.events_df
+    pipe.context.events_df = no_union
+    for limit in (3, 20, 5):
+        assert pipe.report_errors_and_warnings(limit=limit) == _format(
+            events_df().limit(limit).collect()
+        )

@@ -65,6 +65,23 @@ def test_bucketed_checkpoint_missing_column_fails_clearly(spark, tmp_path):
         pipe.run()
 
 
+@pytest.mark.parametrize(
+    "layout", ["checkpoint_partition_by", "checkpoint_bucket_by", "checkpoint_sort_by"]
+)
+def test_checkpoint_layout_missing_column_message(spark, tmp_path, layout):
+    from phaser_spark import PhaserError
+
+    ph = Phase(name="L", **{layout: ["nope"]})
+    pipe = Pipeline(working_dir=str(tmp_path), phases=[ph], spark=spark)
+    data = spark.createDataFrame([(1, 5.0)], "id long, score double")
+    with pytest.raises(PhaserError) as err:
+        pipe.run(data)
+    assert str(err.value) == (
+        f"Phase L: {layout} columns ['nope'] not in phase output "
+        "['__phaser_row_num__', 'id', 'score']"
+    )
+
+
 def test_bucketed_checkpoint_without_working_dir(spark, tmp_path):
     # no working dir -> the bucketed checkpoint lands as a managed table
     # under the warehouse dir; the pipeline result is unaffected

@@ -1,14 +1,15 @@
-"""Round-13 optimization measurement harness (plans dir via MEASURE_PLANS_DIR, default plans/r13) (guide §1).
+"""Optimization measurement harness (guide §1).
 
-For each bench query: capture .explain("formatted") into plans/r12/,
+For each bench query: capture .explain("formatted") into plans/<dir>/,
 time N noop-sink runs (same methodology as bench.py), and count the
 Spark jobs the query launches (driver-action pressure — localCheckpoint
 / eager counts / collects all show up here).  Writes a JSON summary to
 tools/measure_out/<tag>.json.
 
 Usage:
-    python tools/measure_r12.py <tag> [query ...]      # default: all bench queries
+    python tools/measure_r13.py <tag> [query ...]      # default: all bench queries
 Env:
+    MEASURE_PLANS_DIR (default r13; r12 reproduces the round-12 plans/r12 dumps)
     SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
     MEASURE_RUNS (default 3)
     MEASURE_PLANS (default 1; 0 skips plan capture)

@@ -4,7 +4,7 @@ For each named query: split driver-side cost (DataFrame construction,
 analysis+physical planning) from execution, and — via the Spark event
 log — report per-stage task counts, per-stage wall time, total executor
 task time, and the max/median task skew.  This answers the question the
-job-count harness (tools/measure_r12.py) cannot: WHICH stage pins the
+job-count harness (tools/measure_r13.py) cannot: WHICH stage pins the
 wall clock and whether it parallelizes.
 
 Usage:
