@@ -782,9 +782,10 @@ def pq_encode_embeddings(spark, sf_dir):
     64-dim corpus compressed to m=8 one-byte-sized codes via a
     deterministic medoid codebook (the md5-order draw — SQL-replayable)
     — 4·d bytes → m bytes is what makes a 100 TB ANN index fit executor
-    memory.  Small codebooks encode as ONE Catalyst projection (literal
-    sub-centroids, whole-stage codegen); the large-codebook path is m
-    Arrow matmuls per batch (equivalence test-pinned).  Integer output:
+    memory.  One Arrow pass encodes through the nearest-centroid kernel
+    per subspace (a matmul shortlist re-checked by the exact fold, so
+    the codes equal the literal-fold projection at any codebook size —
+    tests/test_nearest_kernel.py).  Integer output:
     the oracle hash-check catches any disagreement as a whole-number
     diff.  The ADC search half (``pq_topk``) is pytest-verified against
     exact L2 structure (tight clusters make within-cluster order
@@ -2194,19 +2195,20 @@ def semantic_dedup_embeddings(spark, sf_dir):
     quadratic (3.3 s → 188 s at 10×), so the headline query now runs
     what a 100 TB corpus must: ``target_cell_rows`` auto-sizes the cell
     count to n/target (LINEAR pair work), which lands >64 cells at
-    every test SF and therefore exercises ``assign_cells_arrow`` — one
-    broadcast ``(batch × dim) @ (dim × k)`` matmul + argmin per Arrow
-    batch instead of an O(k·dim)-literal Catalyst plan.  Within-cell
+    every test SF.  Cells come from ``assign_cells``, the one
+    nearest-centroid kernel: a broadcast ``(batch × dim) @ (dim × k)``
+    matmul shortlist per Arrow batch, re-checked by the exact ordered
+    fold, instead of an O(k·dim)-literal Catalyst plan.  Within-cell
     cosines (ordered double folds, 6-digit truncation) drop every
     vector with a lower-id near-dup at cos ≥ 0.3.  The oracle replays
-    the matmul's expanded distance ‖c‖² − 2x·c; assignments are
-    tie-robust on this data (min relative nearest-vs-second margin
-    ≈ 1e-4 at sf0.01, ≈ 3e-5 at sf0.1 — pinned by
+    the expanded distance ‖c‖² − 2x·c; assignments are tie-robust on
+    this data (min relative nearest-vs-second margin ≈ 1e-4 at sf0.01,
+    ≈ 3e-5 at sf0.1 — pinned by
     ``test_semantic_dedup_headline_margin_is_tie_robust``), so the
-    last-ulp rounding difference between BLAS and the SQL fold cannot
-    flip a cell.  ``target_cell_rows=6`` is tuned to the tiny test
-    corpus (500–2000 vectors) so the auto rule crosses the 64-cell
-    Arrow threshold; production corpora use 256–1024."""
+    last-ulp rounding difference between that expansion and the fold
+    cannot flip a cell.  ``target_cell_rows=6`` is tuned to the tiny
+    test corpus (500–2000 vectors) so the cell count grows with n;
+    production corpora use 256–1024."""
     emb = _t(spark, sf_dir, "embeddings")
     return dedup.semantic_dedup(
         emb.select("vec_id", "embedding"),
@@ -2849,10 +2851,10 @@ def web_canonical_urls(spark, sf_dir):
 
 def kmeans_embedding_cells(spark, sf_dir):
     """Fully distributed Lloyd's k-means (``ops.similarity.kmeans_fit``,
-    k=8, 2 rounds): per round, assignment is the bit-identical
-    exact-fold Arrow pass of ``assign_cells`` (same numeric results as
-    the literal Catalyst projection the oracle replays; ``use_arrow=
-    False`` pins that literal form) and the update is per-(cell, dim)
+    k=8, 2 rounds): per round, assignment is ``assign_cells``, the one
+    nearest-centroid kernel (same numeric results as the literal
+    Catalyst projection the oracle replays; ``dist_fn=_sq_dist`` pins
+    that literal form) and the update is per-(cell, dim)
     decimal-exact means (posexplode, map-side combine) — only the 8
     centroid vectors visit the driver each round, never the corpus.
     The oracle replays BOTH unrolled rounds (medoid init, ordered-fold
@@ -3258,7 +3260,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- rotated INTO the window in round 12: the r11 verdict's full
         #    shortlist — ten never-externally-checked entries, led by
         #    semantic_dedup_embeddings (now re-pointed at the
-        #    target_cell_rows auto-cells + assign_cells_arrow scale path,
+        #    target_cell_rows auto-cells + Arrow assignment scale path,
         #    clearing the r11 weak), plus streaming_event_window restored
         #    so the window keeps a watermark/windowed-streaming
         #    representative alongside the stateful query --

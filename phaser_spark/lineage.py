@@ -11,10 +11,12 @@ Scale design (SURVEY.md §4.2 "Stable row numbering at ingest"): a global
 exploit the documented layout of ``monotonically_increasing_id()`` —
 partition id in the upper 31 bits, per-partition record index in the lower
 33 bits — to derive (partition, local index) with **zero shuffle**, count
-rows per partition in one tiny aggregate job, prefix-sum those counts on
+rows per partition in one small aggregate, prefix-sum those counts on
 the driver (one scalar per partition), and add the offset back via a
 broadcast join.  Total cost: one extra pass over the data, no global sort,
-no single-reducer stage.
+no single-reducer stage.  In Spark jobs: the count costs 2 (the AQE map
+stage and the result), and every later action over the numbered plan
+pays 1 more to broadcast the offsets.
 """
 
 from __future__ import annotations
@@ -127,8 +129,8 @@ def with_row_numbers(
     tagged = df.withColumn(_PID, F.shiftrightunsigned(mid, 33).cast("long")).withColumn(
         _LOCAL, (mid.bitwiseAND(F.lit(_MID_LOCAL_MASK))).cast("long")
     )
-    # One tiny job: rows per partition (map-side combine; result is
-    # n_partitions rows on the driver).
+    # Rows per partition (map-side combine; result is n_partitions rows
+    # on the driver): 2 Spark jobs, the AQE map stage and the result.
     counts = sorted(
         (r[_PID], r["cnt"])
         for r in tagged.groupBy(_PID).agg(F.count(F.lit(1)).alias("cnt")).collect()

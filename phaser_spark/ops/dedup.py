@@ -967,14 +967,13 @@ def semantic_dedup(
     checkpoint the input first or pass ``approx_n`` (any estimate of the
     row count — shard-manifest totals, a prior pass's count; cell
     sizing only needs the right order of magnitude) to skip the count
-    entirely.  Assignment stays a Catalyst literal projection up to 64
-    cells and switches to :func:`similarity.assign_cells_arrow` (one
-    matmul+argmin per Arrow batch, centroid matrix broadcast) beyond
-    that, where a literal plan stops being viable.  Never all-pairs
+    entirely.  Assignment is :func:`similarity.assign_cells`, the one
+    nearest-centroid kernel (a matmul shortlist re-checked by the exact
+    fold, centroid matrix broadcast) at any cell count.  Never all-pairs
     across cells; the hyperplane-LSH variant
     (:func:`embedding_dup_pairs`) is the alternative when even linear
     in-cell work must shrink."""
-    from .similarity import assign_cells, assign_cells_arrow, medoid_centroids
+    from .similarity import assign_cells, medoid_centroids
 
     if target_cell_rows is not None:
         if target_cell_rows < 1:
@@ -990,8 +989,7 @@ def semantic_dedup(
         F.col(id_col).alias("__sd_id"),
         F.col(vec_col).cast("array<double>").alias("__sd_v"),
     )
-    assign = assign_cells if len(centroids) <= 64 else assign_cells_arrow
-    cells = assign(sel, centroids, "__sd_v", out_col="__sd_cell")
+    cells = assign_cells(sel, centroids, "__sd_v", out_col="__sd_cell")
     # hoist the norm to one fold per VECTOR: computing it inside the pair
     # projection re-folds both 64-element arrays per PAIR — measured 2× the
     # whole scoring leg at sf0.1.  Same fold order per vector, so the
@@ -1021,9 +1019,7 @@ def semantic_dedup(
         .distinct()
     )
     # reuse the single cell assignment for the output instead of
-    # re-assigning survivors — the 1024-literal centroid expression tree
-    # is the dominant (constant) analysis cost of this plan; one copy
-    # per consumer, not two
+    # re-assigning survivors: one kernel pass per vector, not two
     survivors = cells.select("__sd_id", "__sd_cell").join(
         dropped, "__sd_id", "left_anti"
     )

@@ -410,9 +410,8 @@ def pca_project(
     SemDeDup-style preconditioning).  Small models (k·d ≤ 4096) run as a
     pure Catalyst expression (zip_with dot per component — plan
     literals, whole-stage codegen); larger ones go through one Arrow
-    matmul per batch exactly like :func:`similarity.assign_cells_arrow`
-    (dirty rows get a NULL projection there, matching the literal
-    path's null-poison)."""
+    matmul per batch with the model on a Spark broadcast (dirty rows get
+    a NULL projection there, matching the literal path's null-poison)."""
     import numpy as np
 
     mean = model["mean"]

@@ -16,10 +16,9 @@ Spark-first shapes:
 * ``pq_train`` — deterministic medoid codebook (the ``md5(id)`` draw the
   other quantizers use — exactly replayable by an external SQL oracle)
   or, for better recall, k-means per subspace on a driver sample.
-* ``pq_encode`` — a pure Catalyst projection for small codebooks
-  (literal sub-centroids, whole-stage codegen, integer output an oracle
-  can hash exactly) and one Arrow argmin per subspace per batch beyond
-  the literal-plan budget.
+* ``pq_encode`` — one Arrow pass, the shared nearest-centroid kernel
+  per subspace: codes equal the literal-fold projection bit-for-bit
+  (integer output an oracle can hash exactly) for any codebook size.
 * ``pq_topk`` — queries' ADC tables ride a Spark broadcast; each Arrow
   batch of corpus codes computes all query distances with numpy table
   gathers and emits only its per-query top-k CANDIDATES (Q·k rows per
@@ -118,136 +117,48 @@ def pq_encode(
     ids, squared-L2 argmin per subspace, FIRST minimum wins ties — the
     deterministic rule every quantizer here shares).
 
-    Small codebooks (m·k_sub·dsub ≤ 8192 literals) run as one Arrow
-    ``mapInPandas`` pass whose arithmetic replicates the historical
-    literal-fold Catalyst projection bit-for-bit (strictly sequential
-    (a−b)² accumulation per subspace, first-minimum tie rule), so
-    oracle-replayed codes are unchanged even though the plan now carries
-    a MapInPandas node instead of a codegen'd projection.  Beyond the
-    budget, one Arrow pass does m ``(batch × dsub) @ (dsub × k_sub)``
-    matmuls per batch with the codebook on a Spark broadcast.  Dirty-row
-    rule on both paths: a null vector, a vector shorter than m·dsub, or
-    a null element among the first m·dsub → NULL code array; NaN/Inf
-    elements COMPUTE THROUGH (an all-NaN subspace resolves to sub-code
-    1), exactly as the literal fold behaved."""
-    from .similarity import _shadow_out_col
-
-    df, restore_order = _shadow_out_col(df, out_col)
-    m = len(codebook)
-    k_sub = len(codebook[0])
-    dsub = len(codebook[0][0])
-    d = m * dsub
-    v = F.col(vec_col).cast("array<double>")
-    if m * k_sub * dsub <= 8192:
-        # r12 optimization (guide §4.2): this branch used to inline the
-        # codebook as O(m·k_sub·dsub) plan literals wrapped in
-        # transform/zip_with/aggregate — CodegenFallback expressions
-        # evaluated interpreted per row (~2.5 s of py4j plan build plus
-        # ~2.5 ms/row at m=8,k_sub=16,dsub=8).  The Arrow pass below
-        # reproduces the SAME arithmetic bit-for-bit: per subspace a
-        # strictly sequential (a−b)² fold (np.sum's pairwise rounding
-        # differs — see _fold_dists_exact) and the first-min tie rule,
-        # so oracle-replayed codes are unchanged.  Dirty-vector
-        # semantics replicate the literal fold exactly: codes are NULL
-        # when the vector is null, shorter than d, or has a null element
-        # among the first d; EXTRA elements beyond d are ignored
-        # (F.slice never read them) and NaN/Inf elements compute through
-        # (an all-NaN subspace resolves to sub-code 1).
-        import numpy as np
-        import pandas as pd
-
-        from .similarity import _first_min_idx, _fold_dists_exact
-
-        head = F.slice(v, 1, d)
-        dirty = (
-            v.isNull()
-            | (F.size(v) < F.lit(d))
-            | F.exists(head, lambda x: x.isNull())
-        )
-        staged = df.withColumn("__pq_dirty__", F.coalesce(dirty, F.lit(True)))
-        # per-subspace arrays, not one 3-D block: k_sub may vary by
-        # subspace (the literal path accepted ragged codebooks)
-        book_np = [np.asarray(sub, dtype=np.float64) for sub in codebook]
-        bc = df.sparkSession.sparkContext.broadcast(book_np)
-        schema = T.StructType(
-            list(staged.schema.fields)
-            + [T.StructField(out_col, T.ArrayType(T.IntegerType()))]
-        )
-
-        def gen_exact(batches):
-            bk = bc.value
-            m_ = len(bk)
-            dsub_ = bk[0].shape[1]
-            d_ = m_ * dsub_
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    yield pdf.assign(**{out_col: pd.Series([], dtype="object")})
-                    continue
-                mat = np.zeros((n, d_), dtype=np.float64)
-                valid = np.zeros(n, dtype=bool)
-                for i, vv in enumerate(pdf[vec_col]):
-                    if vv is None:
-                        continue
-                    try:
-                        a = np.asarray(vv, dtype=np.float64)
-                    except (TypeError, ValueError):
-                        continue
-                    if a.ndim == 1 and a.shape[0] >= d_:
-                        mat[i] = a[:d_]
-                        valid[i] = True
-                valid &= ~pdf["__pq_dirty__"].to_numpy(dtype=bool)
-                cols = []
-                for s in range(m_):
-                    dist = _fold_dists_exact(
-                        mat[:, s * dsub_ : (s + 1) * dsub_], bk[s]
-                    )
-                    cols.append(_first_min_idx(dist) + 1)
-                codes = np.stack(cols, axis=1).astype("int32")
-                vals = [
-                    codes[i].tolist() if valid[i] else None for i in range(n)
-                ]
-                yield pdf.assign(**{out_col: pd.Series(vals, dtype="object")})
-
-        out = staged.mapInPandas(gen_exact, schema=schema).drop("__pq_dirty__")
-        return out.select(*restore_order) if restore_order else out
-
+    One Arrow pass calls the nearest-centroid kernel
+    (:func:`similarity._nearest`) once per subspace, for any codebook
+    size: a matmul shortlist re-checked by the strictly sequential
+    (a−b)² fold, so the codes equal the literal-fold Catalyst projection
+    bit-for-bit.  The codebook rides a Spark broadcast, one array per
+    subspace (k_sub may vary by subspace).  Dirty rows: a null vector, a
+    vector shorter than m·dsub, or a null element among the first m·dsub
+    → NULL code array; extra elements are ignored, and NaN/Inf elements
+    compute through (an all-NaN subspace resolves to sub-code 1)."""
     import numpy as np
-    import pandas as pd
 
-    from .similarity import _dense_batch
+    from .similarity import _map_vectors, _nearest
 
-    book = np.asarray(codebook, dtype=np.float64)  # m × k_sub × dsub
-    bc = df.sparkSession.sparkContext.broadcast(book)
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(out_col, T.ArrayType(T.IntegerType()))]
+    book = [np.asarray(sub, dtype=np.float64) for sub in codebook]
+    dsub = book[0].shape[1]
+
+    def encode(mat, bk):
+        codes = [
+            _nearest(mat[:, s * dsub : (s + 1) * dsub], sub, 1)[:, 0]
+            for s, sub in enumerate(bk)
+        ]
+        return np.stack(codes, axis=1).tolist()
+
+    return _map_vectors(
+        df, vec_col, len(book) * dsub, out_col, T.ArrayType(T.IntegerType()),
+        encode, book, prefix=True,
     )
 
-    def gen(batches):
-        bk = bc.value
-        m_, _, dsub_ = bk.shape
-        d = m_ * dsub_
-        for pdf in batches:
-            mat, valid = _dense_batch(pdf[vec_col], d)
-            if mat is None:
-                yield pdf.assign(**{out_col: pd.Series([], dtype="object")})
-                continue
-            cols = []
-            for s in range(m_):
-                sub = mat[:, s * dsub_ : (s + 1) * dsub_]
-                cent = bk[s]
-                dist = (cent * cent).sum(1)[None, :] - 2.0 * (sub @ cent.T)
-                cols.append(dist.argmin(axis=1) + 1)
-            codes = np.stack(cols, axis=1).astype("int32")
-            vals = [
-                codes[i].tolist() if valid[i] else None
-                for i in range(len(codes))
-            ]
-            yield pdf.assign(**{out_col: pd.Series(vals, dtype="object")})
 
-    out = df.mapInPandas(gen, schema=schema)
-    return out.select(*restore_order) if restore_order else out
+def _adc_tables(qmat, book):
+    """ADC tables ``[q][s][c] = ‖q_s − book[s][c]‖²`` as (Q × m × k_sub)
+    nested lists, each entry the strictly sequential fold the SQL oracle
+    replays — the one table builder of :func:`pq_topk` and
+    :func:`ivfpq_topk`."""
+    from .similarity import _fold_dists_exact
+
+    dsub = len(book[0][0])
+    per_sub = [
+        _fold_dists_exact(qmat[:, s * dsub : (s + 1) * dsub], sub).tolist()
+        for s, sub in enumerate(book)
+    ]
+    return [list(t) for t in zip(*per_sub)]
 
 
 def pq_topk(
@@ -303,14 +214,7 @@ def pq_topk(
         raise PhaserError(
             f"pq_topk: query dim {qmat.shape[1]} != codebook dim {d}"
         )
-    # ADC tables: tables[q, s, c] = ||q_s - cents[s][c]||^2
-    tables = np.stack(
-        [
-            ((qmat[:, s * dsub : (s + 1) * dsub][:, None, :] - book[s][None, :, :]) ** 2).sum(-1)
-            for s in range(m)
-        ],
-        axis=1,
-    )  # Q × m × k_sub
+    tables = np.asarray(_adc_tables(qmat, book))  # Q × m × k_sub
     bc = codes_src.sparkSession.sparkContext.broadcast((qids, tables))
     schema = T.StructType(
         [
@@ -363,31 +267,6 @@ def pq_topk(
     )
 
 
-def _adc_tables_expr(qv, codebook, sq=None):
-    """Per-row ADC table as a Catalyst literal expression: ``m`` arrays of
-    ``k_sub`` squared-L2 distances between the row's query subvector and
-    each sub-centroid.  O(m·k_sub·dsub) plan literals — the small-book
-    regime; large books attach tables via the Arrow path instead."""
-    m = len(codebook)
-    dsub = len(codebook[0][0])
-
-    def sub_dist(s, c):
-        sub = F.slice(qv, s * dsub + 1, dsub)
-        cent = F.array(*[F.lit(x) for x in c])
-        return F.aggregate(
-            F.zip_with(sub, cent, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-
-    return F.array(
-        *[
-            F.array(*[sub_dist(s, c) for c in codebook[s]])
-            for s in range(m)
-        ]
-    )
-
-
 def ivfpq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -405,9 +284,10 @@ def ivfpq_topk(
     pipeline, composed entirely from Catalyst primitives:
 
     1. corpus rows route to their nearest coarse cell
-       (:func:`similarity.assign_cells`, Arrow form above 64 cells) and
-       carry their m PQ codes (:func:`pq_encode`);
-    2. each query ranks its ``n_probe`` nearest cells and carries its
+       (:func:`similarity.assign_cells`) and carry their m PQ codes
+       (:func:`pq_encode`);
+    2. each query ranks its ``n_probe`` nearest cells
+       (:func:`similarity.probe_cells`, the same kernel) and carries its
        (m × k_sub) ADC table;
     3. candidates meet in ONE equi-join on the cell id (each query scans
        n_probe/n_centroids of the index), and the approximate distance
@@ -424,186 +304,43 @@ def ivfpq_topk(
     import numpy as np
 
     from .similarity import (
+        _map_vectors,
         _rank_topk,
-        _sq_dist,
         assign_cells,
-        assign_cells_arrow,
         medoid_centroids,
-        probe_cells_arrow,
+        probe_cells,
     )
 
     cents = centroids or medoid_centroids(corpus, id_col, vec_col, n_centroids)
     book = codebook or pq_train(
         corpus, vec_col, m=m, k_sub=k_sub, id_col=id_col
     )
-    mm, kk_sub, dsub = len(book), len(book[0]), len(book[0][0])
     base = spread_for_compute(corpus).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
     )
-    assign = assign_cells if len(cents) <= 64 else assign_cells_arrow
     coded = pq_encode(
-        assign(base, cents, "cv", out_col="cell"), book, "cv", out_col="codes"
+        assign_cells(base, cents, "cv", out_col="cell"), book, "cv",
+        out_col="codes",
     ).select("neighbor_id", "cell", "codes")
 
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
     )
-    small_cents = len(cents) <= 64
-    small_book = mm * kk_sub * dsub <= 8192
-    if small_cents and small_book:
-        # r12 optimization (guide §4.2): the probe ranking used to inline
-        # every centroid as plan literals and the ADC tables as an
-        # O(m·k_sub·dsub)-literal expression — several seconds of py4j
-        # plan construction and interpreted CodegenFallback evaluation
-        # per call.  One Arrow pass over the (small) query set computes
-        # BOTH with the bit-identical sequential fold: cell distances
-        # ranked (distance asc, cell asc — the literal array_sort rule)
-        # and per-subspace ADC tables, yielding the exploded
-        # (query_id, cell, tables) probe rows directly.  Dirty query
-        # vectors (null / ragged / null element) probe no cells and
-        # vanish from the top-k — same as probe_cells_arrow documents.
-        import pandas as pd
-
-        from .similarity import _fold_dists_exact
-
-        cents_np = np.asarray(cents, dtype=np.float64)
-        book_np = np.asarray(book, dtype=np.float64)
-        d_full = cents_np.shape[1]
-        bc = q.sparkSession.sparkContext.broadcast((cents_np, book_np))
-        qdirty = (
-            F.col("qv").isNull()
-            | (F.size("qv") != F.lit(d_full))
-            | F.exists("qv", lambda x: x.isNull())
-        )
-        staged_q = q.withColumn(
-            "__q_dirty__", F.coalesce(qdirty, F.lit(True))
-        )
-        out_schema = T.StructType(
-            [
-                staged_q.schema["query_id"],
-                T.StructField("cell", T.IntegerType()),
-                T.StructField(
-                    "tables", T.ArrayType(T.ArrayType(T.DoubleType()))
-                ),
-            ]
-        )
-        npb = min(n_probe, len(cents))
-
-        def gen_probe(batches):
-            cents_, bk = bc.value
-            m_, _, dsub_ = bk.shape
-            for pdf in batches:
-                rows_q, rows_c, rows_t = [], [], []
-                for qid, qv, bad in zip(
-                    pdf["query_id"], pdf["qv"], pdf["__q_dirty__"]
-                ):
-                    if bad or qv is None:
-                        continue
-                    try:
-                        a = np.asarray(qv, dtype=np.float64)
-                    except (TypeError, ValueError):
-                        continue
-                    if a.shape != (cents_.shape[1],):
-                        continue
-                    dcell = _fold_dists_exact(a[None, :], cents_)[0]
-                    # literal rule: array_sort(struct(d, cell)) — distance
-                    # asc, NaN after every number, ties by lower cell id
-                    key1 = np.isnan(dcell).astype(np.int8)
-                    key2 = np.where(key1 == 1, 0.0, dcell)
-                    order = np.lexsort(
-                        (np.arange(len(dcell)), key2, key1)
-                    )[:npb]
-                    tabs = [
-                        _fold_dists_exact(
-                            a[None, s * dsub_ : (s + 1) * dsub_], bk[s]
-                        )[0].tolist()
-                        for s in range(m_)
-                    ]
-                    for c_ in order:
-                        rows_q.append(qid)
-                        rows_c.append(int(c_) + 1)
-                        rows_t.append(tabs)
-                yield pd.DataFrame(
-                    {"query_id": rows_q, "cell": rows_c, "tables": rows_t}
-                )
-
-        probed = staged_q.mapInPandas(gen_probe, schema=out_schema)
-    elif small_cents:
-        cent_arr = F.array(*[F.array(*[F.lit(x) for x in c]) for c in cents])
-        dists = F.transform(cent_arr, lambda ce: _sq_dist(F.col("qv"), ce))
-        ranked = F.slice(
-            F.array_sort(
-                F.zip_with(
-                    dists,
-                    F.sequence(F.lit(1), F.lit(len(cents))),
-                    lambda d, i: F.struct(d.alias("d"), i.alias("cell")),
-                )
-            ),
-            1,
-            n_probe,
-        )
-        probed = q.withColumn(
-            "cell", F.explode(F.transform(ranked, lambda s: s["cell"]))
-        )
-    else:
-        probed = probe_cells_arrow(q, cents, "qv", n_probe, out_col="__pc")
-        probed = probed.withColumn("cell", F.explode("__pc")).drop("__pc")
-    if small_cents and small_book:
-        pass  # tables already attached by the fused probe pass above
-    elif small_book:
-        probed = probed.withColumn(
-            "tables", _adc_tables_expr(F.col("qv"), book)
-        )
-    else:
-        import pandas as pd
-
-        bk = np.asarray(book, dtype=np.float64)
-        bc = probed.sparkSession.sparkContext.broadcast(bk)
-        schema = T.StructType(
-            list(probed.schema.fields)
-            + [
-                T.StructField(
-                    "tables", T.ArrayType(T.ArrayType(T.DoubleType()))
-                )
-            ]
-        )
-
-        def gen(batches):
-            from .similarity import _dense_batch
-
-            b = bc.value
-            m_, _, dsub_ = b.shape
-            d = m_ * dsub_
-            for pdf in batches:
-                mat, valid = _dense_batch(pdf["qv"], d)
-                if mat is None:
-                    yield pdf.assign(tables=pd.Series([], dtype="object"))
-                    continue
-                vals = []
-                for i in range(len(mat)):
-                    if not valid[i]:
-                        vals.append(None)
-                        continue
-                    vals.append(
-                        [
-                            (
-                                (
-                                    mat[i, s * dsub_ : (s + 1) * dsub_][None, :]
-                                    - b[s]
-                                )
-                                ** 2
-                            )
-                            .sum(-1)
-                            .tolist()
-                            for s in range(m_)
-                        ]
-                    )
-                yield pdf.assign(tables=pd.Series(vals, dtype="object"))
-
-        probed = probed.mapInPandas(gen, schema=schema)
-    probed = probed.select("query_id", F.col("cell").cast("int"), "tables")
+    # the (small) query set: per-query ADC tables, then its n_probe
+    # nearest cells through the same kernel as the corpus side; dirty
+    # query vectors get NULL tables and cells and probe nothing
+    tables = _map_vectors(
+        q, "qv", len(cents[0]), "tables",
+        T.ArrayType(T.ArrayType(T.DoubleType())),
+        _adc_tables, [np.asarray(sub, dtype=np.float64) for sub in book],
+    )
+    probed = (
+        probe_cells(tables, cents, "qv", n_probe, out_col="__pc")
+        .withColumn("cell", F.explode("__pc"))
+        .select("query_id", F.col("cell").cast("int"), "tables")
+    )
     joined = coded.join(probed, "cell").filter(
         ~F.col("query_id").eqNullSafe(F.col("neighbor_id"))
     )

@@ -364,208 +364,211 @@ def train_centroids(
     return [[float(x) for x in c] for c in cents]
 
 
-def _fold_dists_exact(mat, cents):
-    """(n × k) squared-L2 distances reproducing the Catalyst literal fold
-    BIT-FOR-BIT: per element ``(x−y)·(x−y)`` then a strictly sequential
-    left fold starting at 0.0 (``F.aggregate``'s order).  ``np.sum`` is
-    pairwise above tiny lengths and rounds differently in the last ulp —
-    hence the explicit per-dimension accumulation loop (vectorized over
-    rows × cells, so the loop length is only ``dim``)."""
+def _fold_pairs(mat, cents, rows, cells):
+    """Squared-L2 distance of each ``(mat[rows[i]], cents[cells[i]])``
+    pair, reproducing the Catalyst literal fold (:func:`_sq_dist`)
+    BIT-FOR-BIT: per element ``(x−y)·(x−y)``, then a strictly
+    sequential left fold from 0.0 (``F.aggregate``'s order; ``np.sum``
+    is pairwise and rounds differently in the last ulp).  The loop runs
+    over ``dim`` with one gathered vector per step, so memory is
+    O(pairs), never a pairs × dim block."""
     import numpy as np
 
-    diff = mat[:, None, :] - cents[None, :, :]
-    sq = diff * diff
-    acc = np.zeros(sq.shape[:2], dtype=np.float64)
-    for i in range(sq.shape[2]):
-        acc = acc + sq[:, :, i]
+    acc = np.zeros(len(rows))
+    with np.errstate(over="ignore", invalid="ignore"):
+        for x, c in zip(mat.T, cents.T):
+            diff = x[rows] - c[cells]
+            acc = acc + diff * diff
     return acc
 
 
-def _first_min_idx(d):
-    """0-based first-minimum index per row under Spark's
-    ``array_position(dists, array_min(dists))`` semantics: NaN never wins
-    unless EVERY distance is NaN (array_min skips NaN; NaN equals NaN in
-    Spark comparisons, so an all-NaN row yields position 1)."""
+def _fold_dists_exact(mat, cents):
+    """(n × k) literal-fold distances of every row to every cell — the
+    PQ ADC-table builder."""
     import numpy as np
 
-    n, k = d.shape
-    nan = np.isnan(d)
-    dm = np.where(nan, np.inf, d)
-    m = dm.min(axis=1)
-    # first index whose value EQUALS the min and is not NaN; a NaN→inf
-    # substitute must not beat a genuine +inf minimum
-    pos = np.where((d == m[:, None]) & ~nan, np.arange(k)[None, :], k)
-    idx = pos.min(axis=1)
-    return np.where(idx == k, 0, idx)  # all-NaN rows: position 1
+    rows, cells = np.divmod(np.arange(len(mat) * len(cents)), len(cents))
+    return _fold_pairs(mat, cents, rows, cells).reshape(len(mat), len(cents))
 
 
-def _fold_matrix_batch(vals, dim):
-    """(n × dim) float64 matrix + validity mask for the EXACT-fold Arrow
-    paths.  Unlike :func:`_dense_batch`, rows with NaN/Inf ELEMENTS stay
-    valid — the literal fold computes straight through them (an all-NaN
-    distance row resolves to cell 1 via :func:`_first_min_idx`), and only
-    null / ragged vectors are invalid.  Arrow→pandas turns null ELEMENTS
-    inside a list into NaN, so element-null detection must happen in
-    Catalyst BEFORE the Python boundary (see the ``__fold_dirty__`` flag
-    in :func:`assign_cells`)."""
+def _nearest(mat, cents, n):
+    """The nearest-centroid kernel: each row's ``n`` nearest 1-based cell
+    ids, an (rows × n) array ranked exactly as the literal fold ranks
+    them — :func:`_fold_pairs` distance ascending, NaN after every
+    number, ties to the lower cell id (``array_position(d,
+    array_min(d))`` at n=1, ``array_sort(struct(d, cell))`` beyond; an
+    all-NaN distance row is cell 1).
+
+    Shortlist: one ``(rows × dim) @ (dim × k)`` matmul gives
+    s = ‖c‖² − 2x·c, the distance minus the row constant ‖x‖².  Both
+    s + ‖x‖² (s in any BLAS order) and the fold lie within γ·(‖x‖+‖c‖)²
+    of the exact distance, γ = (dim+2)u / (1 − (dim+2)u), u = 2⁻⁵³, so every
+    cell whose fold distance can reach the n-th smallest has s within
+    4γ·(‖x‖ + max‖c‖)² of the n-th smallest s.  The tolerance doubles
+    that to cover the rounding of the bound itself and adds a subnormal
+    term for underflow.  Exact re-check: the fold runs on the
+    shortlisted cells only (n cells plus exact ties, on real data).
+    Fallback: a row whose scores or bound are not finite (NaN/Inf
+    elements, overflow, a non-finite centroid) shortlists every cell,
+    which makes its ranking the full fold.  Rows go through in blocks
+    of ~4M scores, so memory is O(block), never rows × k × dim."""
     import numpy as np
 
-    n = len(vals)
-    if n == 0:
-        return None, None
-    mat = np.zeros((n, dim), dtype=np.float64)
-    valid = np.zeros(n, dtype=bool)
-    for i, v in enumerate(vals):
-        if v is None:
-            continue
-        try:
-            a = np.asarray(v, dtype=np.float64)
-        except (TypeError, ValueError):
-            continue
-        if a.shape == (dim,):
-            mat[i] = a
-            valid[i] = True
-    return mat, valid
+    dim, k = mat.shape[1], len(cents)
+    n = min(n, k)
+    gamma = (dim + 2) * 2.0**-53 / (1 - (dim + 2) * 2.0**-53)
+    cent_sq = (cents * cents).sum(axis=1)
+    cent_max = np.sqrt(cent_sq.max())
+    step = max(1, (1 << 22) // k)
+    out = [np.zeros((0, n), dtype=np.int64)]
+    for lo in range(0, len(mat), step):
+        x = mat[lo : lo + step]
+        with np.errstate(all="ignore"):
+            score = cent_sq - 2.0 * (x @ cents.T)
+            bound = (np.sqrt((x * x).sum(axis=1)) + cent_max) ** 2
+            fast = np.isfinite(score).all(axis=1) & np.isfinite(4.0 * bound)
+            nth = np.partition(
+                np.where(fast[:, None], score, 0.0), n - 1, axis=1
+            )[:, n - 1]
+            tol = 8.0 * gamma * bound + (dim + 1) * 2.0**-1070
+            keep = ~fast[:, None] | (score <= (nth + tol)[:, None])
+        rows, cells = np.nonzero(keep)
+        d = _fold_pairs(x, cents, rows, cells)
+        nan = np.isnan(d)
+        order = np.lexsort((cells, np.where(nan, 0.0, d), nan, rows))
+        counts = keep.sum(axis=1)
+        first = np.cumsum(counts) - counts
+        out.append(cells[order][first[:, None] + np.arange(n)] + 1)
+    return np.concatenate(out)
+
+
+def _vector_matrix(col, dim, prefix):
+    """(rows × dim) float64 matrix of an Arrow list column, plus the mask
+    of rows that fold: not a null vector, length ``dim`` (with
+    ``prefix``, at least ``dim``; extra elements are ignored) and no
+    null element among the first ``dim``.  Other rows are zero rows."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    arr = col.cast(pa.list_(pa.float64()))
+    n = len(arr)
+    # flatten() skips null vectors, whose length reads 0 here
+    lens = pc.list_value_length(arr).fill_null(0).to_numpy()
+    flat = arr.flatten()
+    start = np.cumsum(lens) - lens
+    ok = arr.is_valid().to_numpy(zero_copy_only=False)
+    ok &= lens >= dim if prefix else lens == dim
+    pos = np.arange(len(flat)) - np.repeat(start, lens)
+    null_el = flat.is_null().to_numpy(zero_copy_only=False) & (pos < dim)
+    ok &= np.bincount(np.repeat(np.arange(n), lens)[null_el], minlength=n) == 0
+    mat = np.zeros((n, dim))
+    rows = np.flatnonzero(ok)
+    mat[rows] = flat.to_numpy(zero_copy_only=False)[
+        start[rows, None] + np.arange(dim)
+    ]
+    return mat, ok
+
+
+def _map_vectors(df, vec_col, dim, out_col, out_type, fn, payload, prefix=False):
+    """One Arrow pass appending ``out_col = fn(mat, payload)`` — the
+    shared shell of every kernel consumer.  ``payload`` (centroids, a
+    codebook) rides a Spark broadcast, landing on each executor once
+    rather than with every task.  ``fn`` gets the batch as an
+    (rows × dim) float64 matrix and returns one value per row.
+
+    The dirty-row rule lives here (:func:`_vector_matrix`): a null
+    vector, a wrong length or a null element gives NULL; NaN/Inf
+    elements compute through ``fn``.  ``mapInArrow``, not
+    ``mapInPandas``: the pandas round trip turns NaN into NULL in every
+    column it passes through, the vector column included."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    df, restore_order = _shadow_out_col(df, out_col)
+    bc = df.sparkSession.sparkContext.broadcast(payload)
+    arrow_type = to_arrow_type(out_type)
+    schema = T.StructType(
+        list(df.schema.fields) + [T.StructField(out_col, out_type)]
+    )
+
+    def gen(batches):
+        import pyarrow as pa
+
+        value = bc.value
+        for batch in batches:
+            mat, ok = _vector_matrix(batch.column(vec_col), dim, prefix)
+            vals = [v if g else None for v, g in zip(fn(mat, value), ok)]
+            yield batch.append_column(out_col, pa.array(vals, type=arrow_type))
+
+    out = df.mapInArrow(gen, schema=schema)
+    return out.select(*restore_order) if restore_order else out
 
 
 def assign_cells(
     df: DataFrame, centroids: list[list[float]], vec_col: str, out_col: str = "cell",
-    dist_fn=None, use_arrow: bool | None = None,
+    dist_fn=None,
 ) -> DataFrame:
     """Nearest-centroid cell id: squared-L2 argmin, FIRST minimum wins
     ties (mirror `ORDER BY dist, cell LIMIT 1` in SQL), 1-based ids.
 
-    Default path (r12 optimization): one Arrow batch pass — the k×dim
-    centroid matrix rides a Spark broadcast and distances are an exact
-    sequential fold (:func:`_fold_dists_exact`) BIT-IDENTICAL to the
-    literal ``zip_with``/``aggregate`` expression this function used to
-    inline.  The literal form built O(k·dim) plan literals through py4j
-    (~1 s of driver time per call at k·dim=1024) and evaluated as an
-    interpreted CodegenFallback expression per row (~0.2 ms/row) — the
-    guide §4.2 shape, replaced by a vectorized batch matmul-free fold.
-    Dirty-row semantics match the literal fold exactly: null / ragged
-    vector or null element → NULL cell; NaN/Inf elements compute through
-    (an all-NaN distance row is cell 1).
+    One Arrow pass through the :func:`_nearest` kernel for every k: a
+    matmul shortlist re-checked by the exact fold, so the cell is
+    BIT-IDENTICAL to the literal ``zip_with``/``aggregate`` expression
+    (:func:`_sq_dist`) at matmul speed, with the centroid matrix on a
+    Spark broadcast instead of O(k·dim) plan literals.  Dirty rows: a
+    null / wrong-length vector or a null element → NULL cell; NaN/Inf
+    elements compute through (an all-NaN distance row is cell 1).
 
     ``dist_fn`` (e.g. the decimal-exact fold) pins the literal
     expression path — bit-reproducibility of DECIMAL folds is not
-    representable in numpy doubles.  ``use_arrow=False`` forces the
-    literal path for the default distance (path-equivalence tests).
-    For corpus-scaled cell counts (k beyond the broadcast-table regime
-    here) use :func:`assign_cells_arrow`, the ‖c‖²−2x·c matmul form."""
-    if use_arrow is None:
-        use_arrow = dist_fn is None
-    if not use_arrow or dist_fn is not None:
-        sq = dist_fn or _sq_dist
+    representable in numpy doubles; ``dist_fn=_sq_dist`` is the literal
+    double fold the kernel reproduces."""
+    if dist_fn is not None:
         vec = F.col(vec_col).cast("array<double>")
         cent_arr = F.array(*[F.array(*[F.lit(x) for x in c]) for c in centroids])
-        dists = F.transform(cent_arr, lambda c: sq(vec, c))
+        dists = F.transform(cent_arr, lambda c: dist_fn(vec, c))
         return df.withColumn(
             out_col, F.array_position(dists, F.array_min(dists)).cast("int")
         )
-
     import numpy as np
-    import pandas as pd
 
-    df, restore_order = _shadow_out_col(df, out_col)
-    cent = np.asarray(centroids, dtype=np.float64)  # k × dim
-    dim = cent.shape[1]
-    vec = F.col(vec_col).cast("array<double>")
-    # element-nulls become NaN across the Arrow boundary, but the literal
-    # fold distinguishes them (null element → NULL cell, NaN element →
-    # computed); detect them JVM-side and ship one boolean per row
-    dirty = (
-        vec.isNull()
-        | (F.size(vec) != F.lit(dim))
-        | F.exists(vec, lambda x: x.isNull())
-    )
-    staged = df.withColumn("__fold_dirty__", F.coalesce(dirty, F.lit(True)))
-    bc = df.sparkSession.sparkContext.broadcast(cent)
-    schema = T.StructType(
-        list(staged.schema.fields) + [T.StructField(out_col, T.IntegerType())]
+    cent = np.asarray(centroids, dtype=np.float64)
+    return _map_vectors(
+        df, vec_col, cent.shape[1], out_col, T.IntegerType(),
+        lambda mat, c: _nearest(mat, c, 1)[:, 0].tolist(), cent,
     )
 
-    def gen(batches):
-        cents_ = bc.value
-        for pdf in batches:
-            mat, valid = _fold_matrix_batch(pdf[vec_col], cents_.shape[1])
-            if mat is None:
-                yield pdf.assign(**{out_col: pd.array([], dtype="Int32")})
-                continue
-            d = _fold_dists_exact(mat, cents_)
-            out = pd.array(
-                (_first_min_idx(d) + 1).astype("int32"), dtype="Int32"
-            )
-            out[~valid | pdf["__fold_dirty__"].to_numpy(dtype=bool)] = pd.NA
-            yield pdf.assign(**{out_col: out})
 
-    out = staged.mapInPandas(gen, schema=schema).drop("__fold_dirty__")
-    return out.select(*restore_order) if restore_order else out
-
-
-def assign_cells_arrow(
-    df: DataFrame, centroids: list[list[float]], vec_col: str, out_col: str = "cell",
+def probe_cells(
+    df: DataFrame,
+    centroids: list[list[float]],
+    vec_col: str,
+    n_probe: int,
+    out_col: str = "cells",
 ) -> DataFrame:
-    """Nearest-centroid assignment for LARGE k — the 100 TB IVF/SemDeDup
-    path.  The literal-expression form (:func:`assign_cells`) inlines
-    k·dim constants into the plan, which stops being viable past a few
-    hundred centroids; here the k×dim centroid matrix rides the UDF
-    closure (one copy per task, like MLlib's broadcast centers) and each
-    Arrow batch is ONE ``(batch × dim) @ (dim × k)`` matmul + argmin —
-    vectorized, no row explosion, no shuffle.
-
-    Same deterministic rule as the literal path: squared-L2 distance,
-    FIRST minimum wins ties (numpy argmin), 1-based cell ids.  Dirty
-    rows match the literal path's null behavior: a null vector, a
-    wrong-length vector, or one with a null/NaN element gets a NULL cell
-    id (the literal fold's zip_with padding poisons every distance to
-    null there) instead of crashing the task mid-matmul.  Exactness
-    caveat: the matmul expands ‖x−c‖² = ‖x‖²−2x·c+‖c‖² in doubles, whose
-    rounding can differ from the literal path's per-element fold in the
-    last ulp — tie-adjacent assignments may differ between the two paths
-    (both are valid nearest cells; pick one path per corpus)."""
+    """Top-``n_probe`` nearest-centroid ids per row as an ``array<int>``
+    — the query-side twin of :func:`assign_cells`, through the same
+    :func:`_nearest` kernel: literal-fold distance ascending, NaN after
+    every number, ties to the lower cell id (the literal
+    ``array_sort(struct(d, cell))`` rule).  Dirty rows get a NULL list,
+    so an ``explode`` gives them no probe rows."""
     import numpy as np
-    import pandas as pd
 
-    df, restore_order = _shadow_out_col(df, out_col)
-    cent = np.asarray(centroids, dtype=np.float64)  # k × dim
-    # ship the matrix as a Spark broadcast, not a pickled closure: a
-    # closure rides every task launch, while a broadcast lands on each
-    # executor once (k=65536 × dim=1024 doubles is a 512 MB matrix — a
-    # per-task copy of that would dominate scheduling)
-    bc = df.sparkSession.sparkContext.broadcast(
-        (cent.T.copy(), (cent * cent).sum(axis=1))
+    cent = np.asarray(centroids, dtype=np.float64)
+    return _map_vectors(
+        df, vec_col, cent.shape[1], out_col, T.ArrayType(T.IntegerType()),
+        lambda mat, c: _nearest(mat, c, n_probe).tolist(), cent,
     )
-
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.IntegerType())]
-    )
-
-    def gen(batches):
-        cent_t, cent_sq = bc.value
-        for pdf in batches:
-            mat, valid = _dense_batch(pdf[vec_col], cent_t.shape[0])
-            if mat is None:
-                yield pdf.assign(**{out_col: pd.array([], dtype="Int32")})
-                continue
-            # argmin over ‖x‖²−2x·c+‖c‖²; ‖x‖² is constant per row → skip
-            d = cent_sq[None, :] - 2.0 * (mat @ cent_t)
-            out = pd.array((d.argmin(axis=1) + 1).astype("int32"), dtype="Int32")
-            out[~valid] = pd.NA
-            yield pdf.assign(**{out_col: out})
-
-    out = df.mapInPandas(gen, schema=schema)
-    return out.select(*restore_order) if restore_order else out
 
 
 def _shadow_out_col(df: DataFrame, out_col: str):
-    """Preserve ``withColumn`` replace semantics for mapInPandas appends.
+    """Preserve ``withColumn`` replace semantics for Arrow-pass appends.
 
     The Arrow output schema lists every input field plus ``out_col``; a
     pre-existing column of that name would appear TWICE in the schema
-    while the pandas ``assign`` inside produces it once — an Arrow
-    serializer crash at runtime (the literal-expression paths replace it
-    silently, as ``withColumn`` always did).  Drop the stale column up
+    while the batch inside carries it once — an Arrow serializer crash
+    at runtime (the literal-expression paths replace it silently, as
+    ``withColumn`` always did).  Drop the stale column up
     front and hand back the original column order so the caller can
     restore ``out_col`` to its old position after the Arrow pass."""
     if out_col not in df.columns:
@@ -576,11 +579,11 @@ def _shadow_out_col(df: DataFrame, out_col: str):
 
 def _dense_batch(vals, dim):
     """(n × dim) float64 matrix + per-row validity mask from an Arrow
-    batch's vector column.  Invalid rows (null vector, wrong length,
-    null/NaN element, non-numeric) become zero rows with ``valid=False``
-    — the caller masks their output to NULL, mirroring the literal
-    expression path where zip_with padding poisons the fold to null.
-    Returns ``(None, None)`` for an empty batch."""
+    batch's vector column, for the PCA passes in ``ops/embeddings.py``.
+    Invalid rows (null vector, wrong length, null/NaN element,
+    non-numeric) become zero rows with ``valid=False`` — the caller
+    masks their output to NULL.  Returns ``(None, None)`` for an empty
+    batch."""
     import numpy as np
 
     n = len(vals)
@@ -601,63 +604,6 @@ def _dense_batch(vals, dim):
     return mat, valid
 
 
-def probe_cells_arrow(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str,
-    n_probe: int,
-    out_col: str = "cells",
-) -> DataFrame:
-    """Top-``n_probe`` nearest-centroid ids per row as an ``array<int>``
-    — the query-side twin of :func:`assign_cells_arrow` for large k.
-    The literal ranking in :func:`ivf_topk` inlines every centroid as
-    plan constants (O(k·dim) literals), which stops being viable past a
-    few hundred cells exactly like the corpus side; here one
-    ``(batch × dim) @ (dim × k)`` matmul + stable argsort per Arrow
-    batch ranks the same squared-L2 expansion, and the centroid matrix
-    rides a Spark broadcast.
-
-    Determinism matches the literal path's ``array_sort(struct(d,
-    cell))``: distances ascending, ties broken by lower cell id (numpy
-    stable argsort = index order).  Dirty rows (null / ragged / NaN
-    vector) get an EMPTY probe list — they join no cell and vanish from
-    the top-k output, whereas the literal path's null-poisoned sort
-    order is undefined; dirty QUERY vectors have no meaningful
-    neighbors either way.  Same last-ulp caveat as
-    :func:`assign_cells_arrow` on tie-adjacent cells."""
-    import numpy as np
-    import pandas as pd
-
-    df, restore_order = _shadow_out_col(df, out_col)
-    cent = np.asarray(centroids, dtype=np.float64)
-    n_probe = min(n_probe, len(cent))
-    bc = df.sparkSession.sparkContext.broadcast(
-        (cent.T.copy(), (cent * cent).sum(axis=1))
-    )
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(out_col, T.ArrayType(T.IntegerType()))]
-    )
-
-    def gen(batches):
-        cent_t, cent_sq = bc.value
-        for pdf in batches:
-            mat, valid = _dense_batch(pdf[vec_col], cent_t.shape[0])
-            if mat is None:
-                yield pdf.assign(**{out_col: pd.Series([], dtype="object")})
-                continue
-            d = cent_sq[None, :] - 2.0 * (mat @ cent_t)
-            top = np.argsort(d, axis=1, kind="stable")[:, :n_probe] + 1
-            cells = [
-                top[i].astype("int32").tolist() if valid[i] else []
-                for i in range(len(top))
-            ]
-            yield pdf.assign(**{out_col: pd.Series(cells, dtype="object")})
-
-    out = df.mapInPandas(gen, schema=schema)
-    return out.select(*restore_order) if restore_order else out
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -676,69 +622,55 @@ def ivf_topk(
 
     Scale path: the candidate join is an equi-join on ``cell`` — the
     corpus shuffles once by cell id (or is pre-bucketed by it), each query
-    reads n_probe/n_centroids of the data.  The centroid table (k × dim
-    floats) is embedded as literals; the *probe* side (n_queries × n_probe
-    rows, query vectors included) is broadcast only when
-    ``broadcast_queries`` is True or the query count is provably small —
-    for large query sets leave it None and let AQE pick the join strategy.
-    Same output shape as ``cosine_topk``; recall tuned by ``n_probe``.
-    ``exact`` uses decimal accumulation for distances and cosines so the
-    result is bit-reproducible against an external oracle.  BOTH centroid
-    consumers switch from plan literals to the Arrow matmul form above 64
-    centroids (where an O(k·dim)-literal plan stops being viable):
-    corpus cell assignment via :func:`assign_cells_arrow`, query-side
-    probe ranking via :func:`probe_cells_arrow` — unless ``exact`` pins
-    the oracle-replayable literal fold for both."""
+    reads n_probe/n_centroids of the data.  Corpus cells come from
+    :func:`assign_cells` and query probes from :func:`probe_cells` — the
+    one nearest-centroid kernel for any centroid count; the *probe* side
+    (n_queries × n_probe rows, query vectors included) is broadcast only
+    when ``broadcast_queries`` is True or the query count is provably
+    small — for large query sets leave it None and let AQE pick the join
+    strategy.  Same output shape as ``cosine_topk``; recall tuned by
+    ``n_probe``.  ``exact`` uses decimal accumulation for distances and
+    cosines so the result is bit-reproducible against an external
+    oracle; it pins the literal-expression fold for both centroid
+    consumers."""
     cents = centroids or train_centroids(corpus, vec_col, n_centroids)
-    sq = _sq_dist_decimal if exact else _sq_dist
     base = spread_for_compute(corpus).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
     )
-    if exact:
-        # decimal-exact literal fold: bit-reproducible in an external
-        # SQL oracle, not representable in the numpy fold path
-        c = assign_cells(base, cents, "cv", dist_fn=sq)
-    elif len(cents) <= 64:
-        # default distance → the exact-fold Arrow path inside assign_cells
-        c = assign_cells(base, cents, "cv")
-    else:
-        # same squared-L2 argmin, matmul form (dist_fn is only ever
-        # non-default under exact, which pins the literal path above)
-        c = assign_cells_arrow(base, cents, "cv")
-    c = c.withColumn("cn", _vec_norm(exact, F.col("cv")))
+    sq = _sq_dist_decimal if exact else None
+    c = assign_cells(base, cents, "cv", dist_fn=sq).withColumn(
+        "cn", _vec_norm(exact, F.col("cv"))
+    )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
     ).withColumn("qn", _vec_norm(exact, F.col("qv")))
     # n_probe nearest cells per query, exploded to (query, cell) probe rows
-    if exact or len(cents) <= 64:
+    if exact:
         qvec = F.col("qv")
         cent_arr = F.array(*[F.array(*[F.lit(x) for x in c_]) for c_ in cents])
         dists = F.transform(cent_arr, lambda ce: sq(qvec, ce))
-        ranked = F.slice(
-            F.array_sort(
-                F.zip_with(
-                    dists,
-                    F.sequence(F.lit(1), F.lit(len(cents))),
-                    lambda d, i: F.struct(d.alias("d"), i.alias("cell")),
-                )
+        cells = F.transform(
+            F.slice(
+                F.array_sort(
+                    F.zip_with(
+                        dists,
+                        F.sequence(F.lit(1), F.lit(len(cents))),
+                        lambda d, i: F.struct(d.alias("d"), i.alias("cell")),
+                    )
+                ),
+                1,
+                n_probe,
             ),
-            1,
-            n_probe,
+            lambda s: s["cell"],
         )
-        probes = q.withColumn(
-            "cell", F.explode(F.transform(ranked, lambda s: s["cell"]))
-        ).select("query_id", "qv", "qn", F.col("cell").cast("int"))
+        probes = q.withColumn("__pc", cells)
     else:
-        # query-side twin of the corpus switch above: past 64 cells the
-        # literal ranking is itself an O(k·dim)-literal plan — rank the
-        # probe cells with the same matmul form instead
-        probes = (
-            probe_cells_arrow(q, cents, "qv", n_probe, out_col="__pc")
-            .withColumn("cell", F.explode("__pc"))
-            .select("query_id", "qv", "qn", F.col("cell").cast("int"))
-        )
+        probes = probe_cells(q, cents, "qv", n_probe, out_col="__pc")
+    probes = probes.withColumn("cell", F.explode("__pc")).select(
+        "query_id", "qv", "qn", F.col("cell").cast("int")
+    )
     if broadcast_queries:
         probes = F.broadcast(probes)
     joined = c.join(probes, "cell").filter(
@@ -810,11 +742,11 @@ def kmeans_fit(
     round, e.g. for reproducible IVF cells or SemDeDup clusters shared
     across runs).
 
-    Per round: assignment defaults to the bit-identical exact-fold
-    Arrow pass of :func:`assign_cells` (same numeric results as the
-    historical k×dim literal projection; ``use_arrow=False`` there pins
-    the literal Catalyst form when a Python-free plan is required), and
-    the update is
+    Per round: assignment is :func:`assign_cells` — the one
+    nearest-centroid kernel, bit-identical to the literal k×dim fold
+    projection at every k (``dist_fn=_sq_dist`` there pins the literal
+    Catalyst form when a Python-free plan is required) — and the update
+    is
     :func:`phaser_spark.ops.embeddings.group_centroids` — posexplode +
     per-(cell, dim) decimal means with map-side combine.  Only the k
     centroid vectors visit the driver each round; the corpus never
@@ -831,13 +763,8 @@ def kmeans_fit(
 
     cents = init_centroids or medoid_centroids(corpus, id_col, vec_col, k)
     base = corpus.select(F.col(vec_col).cast("array<double>").alias("v"))
-    # small k: assign_cells' exact-fold Arrow pass (bit-identical to the
-    # literal form, which use_arrow=False still pins); corpus-scaled k
-    # flips to the expanded-matmul Arrow path (exact folds at that k
-    # cost more than the ulp they protect)
-    assign = assign_cells if k <= 64 else assign_cells_arrow
     for _ in range(iters):
-        assigned = assign(base, cents, "v", out_col="cell")
+        assigned = assign_cells(base, cents, "v", out_col="cell")
         updated = {
             int(r["cell"]): [float(x) for x in r["centroid"]]
             for r in group_centroids(assigned, "cell", "v").collect()

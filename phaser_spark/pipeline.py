@@ -57,6 +57,7 @@ from .context import EVENT_SCHEMA, Context
 from .exceptions import DataException, PhaserError
 from .io import (
     SavableObject,
+    _hadoop_fs,
     load_any,
     normalize_event_time,
     save_any,
@@ -236,13 +237,21 @@ class Pipeline:
                         "initialized (init_source) nor produced by an earlier phase"
                     )
             produced |= {o.name for o in ph.extra_outputs}
+        self._load_init_sources()
+
+    def _load_init_sources(self) -> None:
+        """Load every ``init_source`` path into the context as the object
+        a phase declares for that name (e.g. an ``ExtraMapping``, so a row
+        step receives its dict form), or as a plain ``SavableObject`` when
+        no phase declares one."""
+        declared = {
+            spec.name: spec
+            for ph in self.phase_instances
+            for spec in ph.extra_sources
+            if isinstance(spec, SavableObject)
+        }
         for n, path in self._init_paths.items():
-            holder = None
-            for ph in self.phase_instances:
-                for spec in ph.extra_sources:
-                    if isinstance(spec, SavableObject) and spec.name == n:
-                        holder = spec
-            obj = holder or SavableObject(n)
+            obj = declared.get(n) or SavableObject(n)
             obj.load(self.spark, path)
             self.context.set_source(obj)
 
@@ -647,20 +656,16 @@ class Pipeline:
         state: dict = {"next_start": None, "last_batch": None}
 
         def _max_before(path: str, batch_id: int, num_col: str):
-            from pyspark.errors import AnalysisException
-
-            try:
-                existing = self.spark.read.parquet(path)
-            except AnalysisException as e:
-                # ONLY "table does not exist yet" means start fresh; a
-                # transient read failure (throttling, listing timeout)
-                # must fail the batch so the retry renumbers correctly —
-                # swallowing it would restart numbering at 1 over
-                # existing rows
-                msg = str(e)
-                if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                    return None
-                raise
+            # ONLY "table does not exist yet" means start fresh, checked
+            # before reading (a failed read of a missing path makes Spark
+            # log a listener stack trace on every fresh stream); any read
+            # failure (throttling, listing timeout) must fail the batch so
+            # the retry renumbers correctly — swallowing it would restart
+            # numbering at 1 over existing rows
+            fs, jpath = _hadoop_fs(self.spark, path)
+            if not fs.exists(jpath):
+                return None
+            existing = self.spark.read.parquet(path)
             if BATCH_COL not in existing.columns or num_col not in existing.columns:
                 return None
             return (
@@ -1072,10 +1077,7 @@ class DagPipeline(Pipeline):
                         "DAG dependency"
                     )
             produced_outputs |= {o.name for o in ph.extra_outputs}
-        for n, path in self._init_paths.items():
-            obj = SavableObject(n)
-            obj.load(self.spark, path)
-            self.context.set_source(obj)
+        self._load_init_sources()
 
     def run(self, source: str | DataFrame | None = None) -> DataFrame:
         src = self._start_run(source)

@@ -1163,7 +1163,7 @@ def test_pca_fit_project_and_whiten(spark):
 
 def test_pca_project_arrow_path_and_dirty_rows(spark):
     """Models past the literal-plan budget run the Arrow matmul; dirty
-    vectors get a NULL projection there (matching assign_cells_arrow's
+    vectors get a NULL projection there (matching the literal path's
     null rule)."""
     import random as _r
 
@@ -3117,10 +3117,17 @@ def test_semantic_dedup_chain_keeps_only_min(spark):
     assert {r.vec_id for r in out.collect()} == {10}
 
 
-def test_assign_cells_arrow_matches_literal(spark):
-    """The Arrow matmul assignment (the large-k scale path) agrees with
-    the literal-expression path row for row on a non-degenerate corpus —
-    same squared-L2 argmin, same first-min tie rule, same 1-based ids."""
+def _far_cells(cents, n=63):
+    """``cents`` plus ``n`` far-away cells: the same nearest cells, at a
+    cell count past the old 64-cell switch."""
+    dim = len(cents[0])
+    return cents + [[1e3 + j] * dim for j in range(n)]
+
+
+def test_assign_cells_matches_literal_fold(spark):
+    """The kernel's cell equals the literal-expression fold's row for row
+    — same squared-L2 argmin, same first-min tie rule, same 1-based ids
+    — below and above 64 cells."""
     import random as _r
 
     from phaser_spark.ops import similarity
@@ -3130,26 +3137,23 @@ def test_assign_cells_arrow_matches_literal(spark):
         (i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(500)
     ]
     df = spark.createDataFrame(rows, "id long, v array<double>")
-    cents = similarity.medoid_centroids(df, "id", "v", 40)
-    lit = similarity.assign_cells(df, cents, "v", out_col="cell", use_arrow=False)
-    fold = similarity.assign_cells(df, cents, "v", out_col="cell")
-    arr = similarity.assign_cells_arrow(df, cents, "v", out_col="cell")
-    l = {r.id: r.cell for r in lit.collect()}
-    f = {r.id: r.cell for r in fold.collect()}
-    a = {r.id: r.cell for r in arr.collect()}
-    assert a == l
-    # the default exact-fold Arrow path must be BIT-identical to the
-    # literal expression it replaced (r12 optimization), not merely
-    # tie-equivalent like the expanded-matmul form
-    assert f == l
-    assert min(a.values()) >= 1 and max(a.values()) <= 40
+    for k in (40, 80):
+        cents = similarity.medoid_centroids(df, "id", "v", k)
+        lit = similarity.assign_cells(
+            df, cents, "v", out_col="cell", dist_fn=similarity._sq_dist
+        )
+        got = similarity.assign_cells(df, cents, "v", out_col="cell")
+        l = {r.id: r.cell for r in lit.collect()}
+        g = {r.id: r.cell for r in got.collect()}
+        assert g == l
+        assert min(g.values()) >= 1 and max(g.values()) <= k
 
 
-def test_assign_cells_arrow_null_and_ragged_rows(spark):
+def test_assign_cells_null_and_ragged_rows(spark):
     """Dirty vectors (null, wrong length, null element) get a NULL cell
-    from the Arrow path — matching the literal fold, where zip_with
-    padding poisons every distance to null — instead of blowing up the
-    task inside the matmul (ADVICE r11)."""
+    from the kernel — matching the literal fold, where zip_with padding
+    poisons every distance to null — instead of blowing up the task
+    inside the matmul (ADVICE r11), at any cell count."""
     from phaser_spark.ops import similarity
 
     rows = [
@@ -3160,28 +3164,28 @@ def test_assign_cells_arrow_null_and_ragged_rows(spark):
         (5, [0.0, 1.0, 0.0]),
     ]
     df = spark.createDataFrame(rows, "id long, v array<double>")
-    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
-    lit = {r.id: r.cell for r in
-           similarity.assign_cells(
-               df, cents, "v", out_col="cell", use_arrow=False
-           ).collect()}
-    fold = {r.id: r.cell for r in
-            similarity.assign_cells(df, cents, "v", out_col="cell").collect()}
-    arr = {r.id: r.cell for r in
-           similarity.assign_cells_arrow(df, cents, "v", out_col="cell").collect()}
-    assert lit == fold == arr == {1: 1, 2: None, 3: None, 4: None, 5: 2}
+    two = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
+    for cents in (two, _far_cells(two)):
+        lit = {r.id: r.cell for r in
+               similarity.assign_cells(
+                   df, cents, "v", out_col="cell", dist_fn=similarity._sq_dist
+               ).collect()}
+        got = {r.id: r.cell for r in
+               similarity.assign_cells(df, cents, "v", out_col="cell").collect()}
+        assert lit == got == {1: 1, 2: None, 3: None, 4: None, 5: 2}
 
 
 def test_assign_cells_fold_arrow_nan_inf_and_tie_semantics(spark):
-    """The r12 exact-fold Arrow default must replicate the literal
-    expression's EDGE semantics, not just clean rows: NaN/Inf elements
-    compute through the fold (an all-NaN/all-Inf distance row resolves
-    to cell 1 — array_min/array_position under Spark's NaN-equals-NaN
-    rule), exact distance ties pick the FIRST centroid, and dirty rows
-    (null vector / ragged / null element) stay NULL."""
+    """The kernel must replicate the literal expression's EDGE semantics,
+    not just clean rows: NaN/Inf elements compute through the fold (an
+    all-NaN/all-Inf distance row resolves to cell 1 — array_min/
+    array_position under Spark's NaN-equals-NaN rule), exact distance
+    ties pick the FIRST centroid, and dirty rows (null vector / ragged /
+    null element) stay NULL.  The same holds past 64 cells, where the
+    old matmul path gave NaN/Inf rows a NULL cell."""
     from phaser_spark.ops import similarity
 
-    cents = [[1.0, 0.0], [0.0, 1.0], [1.0, 0.0]]
+    three = [[1.0, 0.0], [0.0, 1.0], [1.0, 0.0]]
     rows = [
         (1, [0.9, 0.1]),
         (2, [0.5, 0.5]),             # exact tie cell1/cell2 → first wins
@@ -3191,42 +3195,52 @@ def test_assign_cells_fold_arrow_nan_inf_and_tie_semantics(spark):
         (6, None),
     ]
     df = spark.createDataFrame(rows, "id long, v array<double>")
-    lit = {r.id: r.cell for r in
-           similarity.assign_cells(
-               df, cents, "v", out_col="cell", use_arrow=False
-           ).collect()}
-    fold = {r.id: r.cell for r in
-            similarity.assign_cells(df, cents, "v", out_col="cell").collect()}
-    assert lit == fold == {1: 1, 2: 1, 3: 1, 4: 1, 5: None, 6: None}
+    for cents in (three, _far_cells(three)):
+        lit = {r.id: r.cell for r in
+               similarity.assign_cells(
+                   df, cents, "v", out_col="cell", dist_fn=similarity._sq_dist
+               ).collect()}
+        got = {r.id: r.cell for r in
+               similarity.assign_cells(df, cents, "v", out_col="cell").collect()}
+        assert lit == got == {1: 1, 2: 1, 3: 1, 4: 1, 5: None, 6: None}
 
 
-def test_probe_cells_arrow_ranking_and_dirty_rows(spark):
-    """Query-side Arrow probe ranking: distances ascending, ties broken
-    by lower cell id (the literal array_sort(struct(d, cell)) rule);
-    dirty query vectors probe nothing (empty list)."""
+def test_probe_cells_ranking_and_dirty_rows(spark):
+    """Query-side probe ranking: distances ascending, ties broken by
+    lower cell id (the literal array_sort(struct(d, cell)) rule); NaN/Inf
+    queries rank through the fold (all-NaN / all-Inf distances: cell
+    order); dirty query vectors get a NULL list and so no probe rows —
+    below and above 64 cells."""
     from phaser_spark.ops import similarity
 
-    cents = [[1.0, 0.0], [0.0, 1.0], [-1.0, 0.0], [1.0, 0.0]]  # 4 == 1 (tie)
+    four = [[1.0, 0.0], [0.0, 1.0], [-1.0, 0.0], [1.0, 0.0]]  # 4 == 1 (tie)
     rows = [
         (1, [0.9, 0.1]),   # nearest 1 (tie with 4 -> lower id first), then 2
         (2, [0.0, -1.0]),  # equidistant from 1/3/4 -> 1,3 after nothing nearer
         (3, None),
         (4, [0.5]),        # ragged
+        (5, [float("nan"), 0.0]),
+        (6, [0.0, float("-inf")]),
     ]
     df = spark.createDataFrame(rows, "id long, v array<double>")
-    out = {r.id: r.cells for r in
-           similarity.probe_cells_arrow(df, cents, "v", 2, out_col="cells").collect()}
-    assert out[1] == [1, 4]
-    assert out[3] == [] and out[4] == []
-    # query 2: dist to cell 2 is worst; cells 1/3/4 all tie -> [1, 3]
-    assert out[2] == [1, 3]
+    for cents in (four, _far_cells(four)):
+        probed = similarity.probe_cells(df, cents, "v", 2, out_col="cells")
+        out = {r.id: r.cells for r in probed.collect()}
+        assert out[1] == [1, 4]
+        assert out[3] is None and out[4] is None
+        # query 2: dist to cell 2 is worst; cells 1/3/4 all tie -> [1, 3]
+        assert out[2] == [1, 3]
+        # the matmul path returned [] for these past 64 cells
+        assert out[5] == [1, 2] and out[6] == [1, 2]
+        exploded = probed.select("id", F.explode("cells")).collect()
+        assert {r.id for r in exploded} == {1, 2, 5, 6}
 
 
 def test_ivf_topk_large_k_arrow_path_matches_literal(spark):
-    """Above 64 centroids ivf_topk ranks probe cells through the Arrow
-    matmul; with margin-separated data the resulting top-k equals the
+    """Above 64 centroids ivf_topk still ranks probe cells through the
+    kernel; with margin-separated data the resulting top-k equals the
     exact=True run (which pins the literal fold for the SAME centroid
-    list) — proving the query-side switch loses nothing (ADVICE r11)."""
+    list) — the kernel loses nothing at large k (ADVICE r11)."""
     import random as _r
 
     from phaser_spark.ops import similarity
@@ -3278,9 +3292,10 @@ def test_semantic_dedup_target_cell_rows_scales_cells(spark):
 
 
 def test_semantic_dedup_headline_margin_is_tie_robust():
-    """The headline semantic_dedup_embeddings query runs the Arrow
-    matmul assignment against an SQL oracle that folds distances
-    element-wise; the two can differ in the last ulp, so the hash check
+    """The headline semantic_dedup_embeddings query assigns cells by the
+    element-wise fold (the nearest-centroid kernel) against an SQL
+    oracle that ranks the expanded distance ‖c‖² − 2x·c; the two can
+    differ in the last ulp, so the hash check
     is only sound if NO vector sits within rounding noise of two cells.
     Pin that: at the headline configuration (target_cell_rows=6, medoid
     centroids) the min relative margin between nearest and
@@ -3298,7 +3313,7 @@ def test_semantic_dedup_headline_margin_is_tie_robust():
         V = np.array([r[1] for r in rows], dtype=np.float64)
         n = len(V)
         nc = max(16, min(65536, -(-n // 6)))
-        assert nc > 64  # the auto rule must land in arrow territory
+        assert nc > 64  # the auto rule lands past 64 cells
         cent_ids = [
             r[0]
             for r in duckdb.sql(
@@ -4833,7 +4848,7 @@ def test_decode_and_featurize_stub_parity_unchanged(spark):
 
 def test_pq_encode_known_codes_ties_and_dirty_rows(spark):
     """Deterministic encode: known nearest sub-centroids, FIRST-min tie
-    rule, NULL codes for dirty vectors — on the literal path."""
+    rule, NULL codes for dirty vectors."""
     from phaser_spark.ops import pq
 
     # m=2 subspaces of dim 2; sub-centroids on the axes
@@ -4847,8 +4862,8 @@ def test_pq_encode_known_codes_ties_and_dirty_rows(spark):
         (3, None),
         (4, [1.0, 0.0]),             # ragged
         (5, [1.0, None, 0.0, 0.0]),  # null element
-        # r12 exact-fold Arrow path: edge semantics pinned against the
-        # literal expression it replaced (probed on the literal path):
+        # edge semantics pinned against the literal expression the
+        # kernel reproduces (probed on the literal path):
         (6, [0.9, 0.1, 4.0, 4.0, 99.0]),     # longer: extra dims ignored
         (7, [float("nan"), 0.1, 4.0, 4.0]),  # NaN sub1 -> code 1
         (8, [float("inf"), 0.1, 0.1, 0.1]),  # Inf sub1 -> code 1
@@ -4867,8 +4882,9 @@ def test_pq_encode_known_codes_ties_and_dirty_rows(spark):
 
 
 def test_pq_encode_literal_and_arrow_paths_agree(spark):
-    """Above the literal-plan budget pq_encode switches to the Arrow
-    matmul; both paths produce identical integer codes."""
+    """A codebook replicated five times (k_sub 32 → 160) encodes to the
+    same integer codes as the original: identical leading sub-centroids
+    win by the first-min rule at any codebook size."""
     import random as _r
 
     from phaser_spark.ops import pq
@@ -4877,12 +4893,10 @@ def test_pq_encode_literal_and_arrow_paths_agree(spark):
     rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(200)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     book = pq.pq_train(df, m=4, k_sub=32, method="kmeans", seed=1)
-    assert 4 * 32 * 4 <= 8192  # literal path fits
     lit = {r.vec_id: r.c for r in
            pq.pq_encode(df, book, out_col="c").collect()}
-    # force the arrow path by replicating the codebook past the budget:
     # identical leading sub-centroids -> identical codes (first-min)
-    big = [sub + sub + sub + sub + sub for sub in book]  # k_sub 160 -> 4*160*4 > 8192
+    big = [sub + sub + sub + sub + sub for sub in book]
     arrow = {r.vec_id: r.c for r in
              pq.pq_encode(df, big, out_col="c").collect()}
     assert all(arrow[i] == lit[i] for i in lit)
@@ -4942,11 +4956,10 @@ def test_ivfpq_topk_no_nested_loop_and_matches_pq(spark):
     (never a nested loop), the ADC scoring fold is pure Catalyst
     (zip_with table lookups), and with n_probe = n_centroids (no
     pruning) the result equals brute-force pq_topk on the same codebook.
-    r12: cell routing / PQ codes / probe tables moved from interpreted
-    literal expressions to exact-fold Arrow passes (bit-identical
-    arithmetic — see test_pq_encode_known_codes_ties_and_dirty_rows),
-    so MapInPandas nodes are expected where BatchEval-free literal
-    projections used to be."""
+    Cell routing, PQ codes and probe tables are Arrow passes through
+    the nearest-centroid kernel (bit-identical to the literal fold —
+    see tests/test_nearest_kernel.py), so MapInArrow nodes are
+    expected where BatchEval-free literal projections used to be."""
     import random as _r
 
     from phaser_spark.ops import pq

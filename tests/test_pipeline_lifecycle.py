@@ -445,3 +445,37 @@ def test_dag_pipeline_rejects_run_stream(spark):
     dag = DagPipeline(phases={"a": Phase(name="a", steps=[])}, spark=spark)
     with pytest.raises(PhaserError, match="run_stream"):
         dag.run_stream(None, "/tmp/x")
+
+
+def test_init_source_keeps_declared_type_in_dag_pipeline(spark, tmp_path):
+    """A name loaded with ``init_source`` and declared by a phase as an
+    ``ExtraMapping`` reaches a row step as that mapping's dict form under
+    ``DagPipeline`` exactly as under ``Pipeline`` (both load init sources
+    through one method); the DAG used to load a plain SavableObject, so
+    the step got a list of rows."""
+    from phaser_spark import ExtraMapping, row_step
+    from phaser_spark.pipeline import DagPipeline
+
+    lookup = _write_csv(tmp_path, "m.csv", "key,value\na,1\nb,2\n")
+    src = _write_csv(tmp_path, "src.csv", "id,k\n1,a\n2,b\n")
+
+    @row_step(extra_sources=["m"], output_schema="kind string, hit string")
+    def tag(row, m):
+        row["kind"] = type(m).__name__
+        row["hit"] = str(m.get(row["k"])) if isinstance(m, dict) else None
+        return row
+
+    def phase():
+        return Phase(name="P", steps=[tag], extra_sources=[ExtraMapping("m")])
+
+    pipes = [
+        Pipeline(working_dir=str(tmp_path / "lin"), source=src, phases=[phase()], spark=spark),
+        DagPipeline(
+            phases={"P": phase()}, working_dir=str(tmp_path / "dag"), spark=spark
+        ),
+    ]
+    for pipe in pipes:
+        pipe.init_source("m", lookup)
+        out = pipe.run(src)
+        got = {r["id"]: (r["kind"], r["hit"]) for r in out.collect()}
+        assert got == {"1": ("TolerantDict", "1"), "2": ("TolerantDict", "2")}, type(pipe)
