@@ -558,7 +558,7 @@ def u6_flatten_props(spark, sf_dir):
 
 def u1_row_step_derive(spark, sf_dir):
     """Opaque-Python row_step parity (U1): derived columns + DropRowException
-    through the real mapInPandas path (reference phaser/steps.py:108-133)."""
+    through the real mapInArrow path (reference phaser/steps.py:108-133)."""
     from phaser_spark import DropRowException, row_step
 
     @row_step(output_schema="tier string, doubled double")

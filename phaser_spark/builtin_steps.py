@@ -33,8 +33,8 @@ from pyspark.sql import types as T
 
 from .column import Column
 from .constants import INTERNAL_COLS, PHASER_ROW_NUM
-from .exceptions import DataErrorException, PhaserError
-from .steps import batch_step
+from .exceptions import DataErrorException
+from .steps import batch_rows, batch_step
 
 
 def _colname(column) -> str:
@@ -116,26 +116,30 @@ def filter_rows(func: Callable | SparkCol, name: str = "filter_rows"):
         if isinstance(func, SparkCol):
             newly = (~F.col(DROP_COL)) & ~swept & ~F.coalesce(func, F.lit(False))
         else:
-            # the python predicate sees a plain dict of the data columns
+            # the python predicate sees a plain dict of the data columns;
+            # every other column passes through as Arrow, unconverted
             data_cols = _data_columns(df) + [PHASER_ROW_NUM]
             has_swept = SWEPT_COL in df.columns
+            to_rows = batch_rows(T.StructType([df.schema[c] for c in data_cols]))
 
             def gen(batches):
-                for pdf in batches:
-                    sub = pdf[data_cols].astype(object).where(pdf[data_cols].notna(), None)
-                    sw = pdf[SWEPT_COL] if has_swept else [False] * len(pdf)
+                import pyarrow as pa
+                import pyarrow.compute as pc
+
+                for batch in batches:
+                    skip = batch.column(DROP_COL)
+                    if has_swept:
+                        skip = pc.or_kleene(skip, batch.column(SWEPT_COL))
+                    rows = to_rows(batch.select(data_cols))
                     keep = [
-                        bool(dropped) or bool(s) or bool(func(rec))
-                        for dropped, s, rec in zip(
-                            pdf[DROP_COL], sw, sub.to_dict("records")
-                        )
+                        bool(s) or bool(func(r)) for s, r in zip(skip.to_pylist(), rows)
                     ]
-                    yield pdf.assign(__phaser_keep__=keep)
+                    yield batch.append_column("__phaser_keep__", pa.array(keep, pa.bool_()))
 
             schema = T.StructType(
                 list(df.schema.fields) + [T.StructField("__phaser_keep__", T.BooleanType())]
             )
-            df = df.mapInPandas(gen, schema=schema)
+            df = df.mapInArrow(gen, schema=schema)
             newly = ~F.col("__phaser_keep__")
 
         out = (
@@ -155,8 +159,8 @@ def filter_rows(func: Callable | SparkCol, name: str = "filter_rows"):
 
     _filter_rows.__name__ = name
     # Column predicates are one cheap codegen'd comparison per row — not
-    # worth a fan-out exchange; the Python-callable path is an Arrow
-    # mapInPandas pass and keeps the phase's compute spread.
+    # worth a fan-out exchange; the Python-callable path is a mapInArrow
+    # pass and keeps the phase's compute spread.
     _filter_rows.__phaser_needs_spread__ = not isinstance(func, SparkCol)
     return _filter_rows
 

@@ -15,7 +15,8 @@ Column compiles to a pair of Catalyst expressions —
 
 so the whole column stage is one narrow projection: vectorized,
 whole-stage-codegen'd, zero Python in the hot path.  Only a user-supplied
-``fix_value_fn`` *callable* drops to a pandas UDF.
+``fix_value_fn`` *callable* drops to an Arrow-batched Python UDF, which
+hands it plain Python values.
 
 Cast-semantics parity worth calling out (SURVEY.md §1.2):
 
@@ -79,17 +80,14 @@ def _apply_fix(expr: SparkCol, fix, colname: str, spark_type=None) -> SparkCol:
     fixes = fix if isinstance(fix, (list, tuple)) else [fix]
     for f in fixes:
         if callable(f):
-            # Arbitrary Python: vectorized Arrow-batched pandas UDF.
-            # The callable sees the COLUMN'S TYPED value (reference
-            # cast-then-fix semantics) — stringifying first would hand
-            # an IntColumn fix '5' instead of 5, turning v*2 into '55'
-            # and v+1 into a TypeError.
-            import pandas as pd  # noqa: F401
-
-            @F.pandas_udf(ftype)
-            def _udf(s, _f=f):
-                return s.map(lambda v: None if v is None else _f(v))
-
+            # Arbitrary Python: an Arrow-batched Python UDF handing the
+            # callable the COLUMN'S TYPED value (reference cast-then-fix
+            # semantics) as a plain Python value: an IntColumn fix gets 5,
+            # not '5' (v*2 would read '55') nor the 5.0 a pandas UDF hands
+            # over beside a null.  A null never reaches it.
+            _udf = F.udf(
+                lambda v, _f=f: None if v is None else _f(v), ftype, useArrow=True
+            )
             expr = _udf(expr.cast(ftype))
         elif isinstance(f, str):
             if f == "capitalize":

@@ -187,7 +187,7 @@ def covariance_matrix(
     is O(d²): right for oracle-scale dims (d ≤ a few hundred).
 
     ``exact=False`` is the 100 TB path: one ``(batch × d)ᵀ @ (batch ×
-    d)`` outer-product accumulation per Arrow batch (mapInPandas), ONE
+    d)`` outer-product accumulation per Arrow batch (mapInArrow), ONE
     partial row emitted per batch, then a tiny final aggregate over
     #batches rows — the corpus is read once and never expanded.  Double
     accumulation: at web scale the d² sums differ from the exact path
@@ -277,42 +277,35 @@ def covariance_matrix(
             "i", "j", trunc_digits(cov, 6).alias("cov"), F.col("n")
         )
     else:
-        import pandas as pd
-        from pyspark.sql import types as T
+        from .similarity import _vector_matrix
 
         first = df.select(v.alias("v")).first()
         if first is None:
             raise ValueError("covariance_matrix: empty input")
         d = len(first["v"])
 
-        schema = T.StructType(
-            [
-                T.StructField("n", T.LongType()),
-                T.StructField("sx", T.ArrayType(T.DoubleType())),
-                T.StructField("sxx", T.ArrayType(T.DoubleType())),
-            ]
-        )
-
         def partials(batches):
-            from .similarity import _dense_batch
+            import pyarrow as pa
 
-            for pdf in batches:
-                mat, valid = _dense_batch(pdf["v"], d)
-                if mat is None:
-                    continue
-                m = mat[valid]
-                if not len(m):
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "n": [len(m)],
-                        "sx": [m.sum(axis=0).tolist()],
-                        "sxx": [(m.T @ m).ravel().tolist()],
-                    }
-                )
+            vec = pa.list_(pa.float64())
+            for batch in batches:
+                mat, ok = _vector_matrix(batch.column("v"), d, False)
+                # a row with a non-finite element stays out of the sums
+                m = mat[ok & np.isfinite(mat).all(1)]
+                if len(m):
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            pa.array([len(m)], pa.int64()),
+                            pa.array([m.sum(axis=0).tolist()], vec),
+                            pa.array([(m.T @ m).ravel().tolist()], vec),
+                        ],
+                        names=["n", "sx", "sxx"],
+                    )
 
         parts = (
-            df.select(v.alias("v")).mapInPandas(partials, schema=schema).collect()
+            df.select(v.alias("v"))
+            .mapInArrow(partials, "n long, sx array<double>, sxx array<double>")
+            .collect()
         )
         n = sum(p["n"] for p in parts)
         if n == 0:
@@ -410,8 +403,9 @@ def pca_project(
     SemDeDup-style preconditioning).  Small models (k·d ≤ 4096) run as a
     pure Catalyst expression (zip_with dot per component — plan
     literals, whole-stage codegen); larger ones go through one Arrow
-    matmul per batch with the model on a Spark broadcast (dirty rows get
-    a NULL projection there, matching the literal path's null-poison)."""
+    matmul per batch (:func:`similarity._map_vectors`) with the model on
+    a Spark broadcast: a null or wrong-length vector or a null element
+    gives a NULL projection there, NaN/Inf elements compute through."""
     import numpy as np
 
     mean = model["mean"]
@@ -437,31 +431,13 @@ def pca_project(
             outs.append(dot * F.lit(float(s)))
         return df.withColumn(out_col, F.array(*outs))
 
-    import pandas as pd
     from pyspark.sql import types as T
 
-    from .similarity import _dense_batch
+    from .similarity import _map_vectors
 
     mat = (np.asarray(comps, dtype=np.float64) * np.asarray(scales)[:, None]).T
     mu = np.asarray(mean, dtype=np.float64)
-    bc = df.sparkSession.sparkContext.broadcast((mu, mat))
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(out_col, T.ArrayType(T.DoubleType()))]
+    return _map_vectors(
+        df, vec_col, d, out_col, T.ArrayType(T.DoubleType()),
+        lambda x, m: ((x - m[0]) @ m[1]).tolist(), (mu, mat),
     )
-
-    def gen(batches):
-        mu_, mat_ = bc.value
-        for pdf in batches:
-            dense, valid = _dense_batch(pdf[vec_col], len(mu_))
-            if dense is None:
-                yield pdf.assign(**{out_col: pd.Series([], dtype="object")})
-                continue
-            proj = (dense - mu_[None, :]) @ mat_
-            vals = [
-                proj[idx].tolist() if valid[idx] else None
-                for idx in range(len(proj))
-            ]
-            yield pdf.assign(**{out_col: pd.Series(vals, dtype="object")})
-
-    return df.mapInPandas(gen, schema=schema)

@@ -105,8 +105,10 @@ def decode_and_featurize(
     real_decode: bool = False,
     batch_size_hint: int = 256,
 ) -> DataFrame:
-    """Decode binary payloads and extract a feature vector per row via
-    ``mapInPandas`` (Arrow batches; bytes never leave the executor).
+    """Decode binary payloads and extract a feature vector per row in one
+    ``mapInArrow`` pass (bytes never leave the executor; every other
+    column passes through as Arrow, and existing ``features`` /
+    ``content_sha256`` columns are replaced in place).
 
     ``real_decode=True`` decodes with PIL when it is importable (probed
     at module load) — undecodable payloads get NULL features, never a
@@ -122,29 +124,20 @@ def decode_and_featurize(
     # NOTE: no spread here — fanning out a small input spawns one Python
     # worker per partition, and worker startup dwarfs the decode work at
     # test scale; real media corpora arrive already split.
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("features", T.ArrayType(T.DoubleType())),
-            T.StructField("content_sha256", T.StringType()),
-        ]
-    )
+    from .similarity import _append_columns
 
     use_real = bool(real_decode and _HAS_PIL)
 
-    def gen(batches):
+    def columns(batch):
         featurize = _real_image_features if use_real else _fake_features
-        for pdf in batches:
-            payloads = pdf[content_col]
-            pdf = pdf.assign(
-                features=[featurize(p) for p in payloads],
-                content_sha256=[
-                    hashlib.sha256(p or b"").hexdigest() for p in payloads
-                ],
-            )
-            yield pdf
+        payloads = batch.column(content_col).to_pylist()
+        return [
+            [featurize(p) for p in payloads],
+            [hashlib.sha256(p or b"").hexdigest() for p in payloads],
+        ]
 
-    return df.mapInPandas(gen, schema=out_schema)
+    fields = T.StructType.fromDDL("features array<double>, content_sha256 string")
+    return _append_columns(df, fields, columns)
 
 
 def frame_sample(

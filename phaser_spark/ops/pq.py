@@ -184,9 +184,8 @@ def pq_topk(
     batch holds Q·m·k_sub table floats); shard the query set for
     offline all-pairs jobs."""
     import numpy as np
-    import pandas as pd
 
-    from .similarity import _rank_topk
+    from .similarity import _rank_topk, _vector_matrix
 
     book = np.asarray(codebook, dtype=np.float64)
     m, k_sub, dsub = book.shape
@@ -216,44 +215,40 @@ def pq_topk(
         )
     tables = np.asarray(_adc_tables(qmat, book))  # Q × m × k_sub
     bc = codes_src.sparkSession.sparkContext.broadcast((qids, tables))
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("adc_dist", T.DoubleType()),
-        ]
-    )
-    kk = k
 
     def gen(batches):
+        import pyarrow as pa
+
         qids_, tables_ = bc.value
         nq = len(qids_)
-        for pdf in batches:
-            ok = pdf["codes"].notna()
-            ids = pdf["neighbor_id"][ok].to_numpy()
-            if not len(ids):
+        for batch in batches:
+            codes, ok = _vector_matrix(batch.column("codes"), m, False)
+            ids = batch.column("neighbor_id").filter(pa.array(ok))
+            n = len(ids)
+            if not n:
                 continue
-            codes = np.asarray(list(pdf["codes"][ok]), dtype=np.int64) - 1
-            n = len(codes)
+            codes = codes[ok].astype(np.int64) - 1
             # dist[q, row] = sum_s tables[q, s, codes[row, s]]
             dist = np.zeros((nq, n))
             for s in range(tables_.shape[1]):
                 dist += tables_[:, s, :][:, codes[:, s]]
-            top = min(kk, n)
+            top = min(k, n)
             # per-batch partial top-k per query (provably lossless
             # prefilter for the global top-k window)
-            part = np.argpartition(dist, top - 1, axis=1)[:, :top]
-            out_q, out_n, out_d = [], [], []
-            for qi in range(nq):
-                sel = part[qi]
-                out_q.extend([qids_[qi]] * len(sel))
-                out_n.extend(ids[sel].tolist())
-                out_d.extend(dist[qi, sel].tolist())
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "adc_dist": out_d}
+            sel = np.argpartition(dist, top - 1, axis=1)[:, :top].ravel()
+            q = np.repeat(np.arange(nq), top)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(qids_[q], pa.int64()),
+                    ids.take(pa.array(sel)).cast(pa.int64()),
+                    pa.array(dist[q, sel], pa.float64()),
+                ],
+                names=["query_id", "neighbor_id", "adc_dist"],
             )
 
-    cand = codes_src.mapInPandas(gen, schema=schema).filter(
+    cand = codes_src.mapInArrow(
+        gen, "query_id long, neighbor_id long, adc_dist double"
+    ).filter(
         ~F.col("query_id").eqNullSafe(F.col("neighbor_id"))
     )
     # reuse the shared ranking tail: it ranks by "cosine" DESC — feed the

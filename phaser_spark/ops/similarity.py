@@ -470,38 +470,55 @@ def _vector_matrix(col, dim, prefix):
     return mat, ok
 
 
-def _map_vectors(df, vec_col, dim, out_col, out_type, fn, payload, prefix=False):
-    """One Arrow pass appending ``out_col = fn(mat, payload)`` — the
-    shared shell of every kernel consumer.  ``payload`` (centroids, a
-    codebook) rides a Spark broadcast, landing on each executor once
-    rather than with every task.  ``fn`` gets the batch as an
-    (rows × dim) float64 matrix and returns one value per row.
+def _append_columns(df, fields, fn):
+    """One ``mapInArrow`` pass appending the columns of ``fields`` (a
+    ``StructType``), whose values ``fn(batch)`` returns as one list per
+    column — the shell of every vector worker.  The input columns pass
+    through as Arrow, never converted.
 
-    The dirty-row rule lives here (:func:`_vector_matrix`): a null
-    vector, a wrong length or a null element gives NULL; NaN/Inf
-    elements compute through ``fn``.  ``mapInArrow``, not
-    ``mapInPandas``: the pandas round trip turns NaN into NULL in every
-    column it passes through, the vector column included."""
+    A column already named like a field is replaced in place, as
+    ``withColumn`` does: it is dropped up front (else the output schema
+    would list it twice while the batch carries it once, an Arrow
+    serializer crash) and the column order is restored after."""
     from pyspark.sql.pandas.types import to_arrow_type
 
-    df, restore_order = _shadow_out_col(df, out_col)
-    bc = df.sparkSession.sparkContext.broadcast(payload)
-    arrow_type = to_arrow_type(out_type)
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, out_type)]
-    )
+    types = [(f.name, to_arrow_type(f.dataType)) for f in fields]
+    replaced = [f.name for f in fields if f.name in df.columns]
+    order = df.columns + [f.name for f in fields if f.name not in replaced]
+    if replaced:
+        df = df.drop(*replaced)
 
     def gen(batches):
         import pyarrow as pa
 
-        value = bc.value
         for batch in batches:
-            mat, ok = _vector_matrix(batch.column(vec_col), dim, prefix)
-            vals = [v if g else None for v, g in zip(fn(mat, value), ok)]
-            yield batch.append_column(out_col, pa.array(vals, type=arrow_type))
+            for (name, typ), values in zip(types, fn(batch)):
+                batch = batch.append_column(name, pa.array(values, type=typ))
+            yield batch
 
-    out = df.mapInArrow(gen, schema=schema)
-    return out.select(*restore_order) if restore_order else out
+    out = df.mapInArrow(gen, T.StructType(df.schema.fields + fields.fields))
+    return out.select(*order) if replaced else out
+
+
+def _map_vectors(df, vec_col, dim, out_col, out_type, fn, payload, prefix=False):
+    """One Arrow pass appending ``out_col = fn(mat, payload)`` through
+    :func:`_append_columns` — the shared shell of every kernel consumer.
+    ``payload`` (centroids, a codebook) rides a Spark broadcast, landing
+    on each executor once rather than with every task.  ``fn`` gets the
+    batch as an (rows × dim) float64 matrix and returns one value per
+    row.
+
+    The dirty-row rule lives here (:func:`_vector_matrix`): a null
+    vector, a wrong length or a null element gives NULL; NaN/Inf
+    elements compute through ``fn``."""
+    bc = df.sparkSession.sparkContext.broadcast(payload)
+
+    def column(batch):
+        mat, ok = _vector_matrix(batch.column(vec_col), dim, prefix)
+        return [[v if g else None for v, g in zip(fn(mat, bc.value), ok)]]
+
+    fields = T.StructType([T.StructField(out_col, out_type)])
+    return _append_columns(df, fields, column)
 
 
 def assign_cells(
@@ -559,49 +576,6 @@ def probe_cells(
         df, vec_col, cent.shape[1], out_col, T.ArrayType(T.IntegerType()),
         lambda mat, c: _nearest(mat, c, n_probe).tolist(), cent,
     )
-
-
-def _shadow_out_col(df: DataFrame, out_col: str):
-    """Preserve ``withColumn`` replace semantics for Arrow-pass appends.
-
-    The Arrow output schema lists every input field plus ``out_col``; a
-    pre-existing column of that name would appear TWICE in the schema
-    while the batch inside carries it once — an Arrow serializer crash
-    at runtime (the literal-expression paths replace it silently, as
-    ``withColumn`` always did).  Drop the stale column up
-    front and hand back the original column order so the caller can
-    restore ``out_col`` to its old position after the Arrow pass."""
-    if out_col not in df.columns:
-        return df, None
-    order = list(df.columns)
-    return df.drop(out_col), order
-
-
-def _dense_batch(vals, dim):
-    """(n × dim) float64 matrix + per-row validity mask from an Arrow
-    batch's vector column, for the PCA passes in ``ops/embeddings.py``.
-    Invalid rows (null vector, wrong length, null/NaN element,
-    non-numeric) become zero rows with ``valid=False`` — the caller
-    masks their output to NULL.  Returns ``(None, None)`` for an empty
-    batch."""
-    import numpy as np
-
-    n = len(vals)
-    if n == 0:
-        return None, None
-    mat = np.zeros((n, dim), dtype=np.float64)
-    valid = np.zeros(n, dtype=bool)
-    for i, v in enumerate(vals):
-        if v is None:
-            continue
-        try:
-            a = np.asarray(v, dtype=np.float64)
-        except (TypeError, ValueError):
-            continue
-        if a.shape == (dim,) and np.isfinite(a).all():
-            mat[i] = a
-            valid[i] = True
-    return mat, valid
 
 
 def ivf_topk(

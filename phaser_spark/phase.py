@@ -15,7 +15,7 @@ Parity target: reference ``phaser/phase.py`` (SURVEY.md §1.1, §3):
   pruning (``phaser/phase.py:302-328``).
 
 Engine design: a Phase is a **lazy DataFrame transform** — one narrow
-projection for the whole column stage (vectorized, codegen), `mapInPandas`
+projection for the whole column stage (vectorized, codegen), `mapInArrow`
 only for opaque row steps, and policy routing as pure column expressions.
 Nothing materializes until the pipeline checkpoints the phase output; the
 only eager driver actions are tiny (stop_now probe, check_size counts,
@@ -732,7 +732,7 @@ class Phase:
                 .agg(F.sum("value").alias("value"))
             )
         # Materialize the (small, by contract) delta table ONCE: left
-        # un-checkpointed, it stays rooted in the row step's mapInPandas
+        # un-checkpointed, it stays rooted in the row step's mapInArrow
         # plan and every later consumer (the frac probe below, save, the
         # next phase's merge, to_dict) re-executes the arbitrary user row
         # function over the whole input — and under a nondeterministic

@@ -8,7 +8,7 @@ runs while staying correct on a real cluster:
 * shuffle partitions sized to the local core count instead of 200,
 * UTC session timezone so timestamp results are comparable with external
   oracles (DuckDB timestamps are UTC-naive),
-* Arrow enabled for the pandas-UDF step path.
+* Arrow enabled for pandas ingest and ``toPandas``.
 """
 
 from __future__ import annotations

@@ -11,11 +11,14 @@ Parity target: reference ``phaser/steps.py`` (SURVEY.md §2.4):
 
 Execution model differences (Spark-first, SURVEY.md §7.1):
 
-* ``row_step`` compiles to **``mapInPandas``** — Arrow-batched, dict-per-row
-  adapter, executed on executors.  Rows already quarantined by an ERROR
-  event pass through *unchanged* (reference row-skip semantics,
-  ``phaser/phase.py:90-91,101-105``); a failing step leaves the row's
-  values untouched (value semantics, ``phaser/phase.py:101-105``).
+* ``row_step`` compiles to **``mapInArrow``** — Arrow-batched, dict-per-row
+  adapter, executed on executors, handing the function plain Python
+  values as the reference does (NaN, ``None``, ``int``, ``list``,
+  ``dict``, naive ``datetime``: :func:`batch_rows`).  Rows already
+  quarantined by an ERROR event pass through *unchanged* (reference
+  row-skip semantics, ``phaser/phase.py:90-91,101-105``); a failing step
+  leaves the row's values untouched (value semantics,
+  ``phaser/phase.py:101-105``).
 * ``batch_step``/``dataframe_step`` receive the live **Spark DataFrame**
   (the reference hands a list / pandas.DataFrame — at 100 TB only a lazy
   DataFrame makes sense; ``df.toPandas()`` remains the explicit small-data
@@ -32,11 +35,10 @@ Execution model differences (Spark-first, SURVEY.md §7.1):
 
 from __future__ import annotations
 
-import functools
+import datetime
 import inspect
 import json
 from collections import UserDict
-from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,18 +46,15 @@ from pyspark.sql import types as T
 
 from .constants import (
     DROP_COL,
-    DROP_STEP_COL,
     ERROR_COL,
     EVENT_ERROR,
     EVENT_WARNING,
     INTERNAL_COLS,
     PHASER_ROW_NUM,
-    SWEPT_COL,
     WARNING_COL,
 )
 from .exceptions import (
     DataErrorException,
-    DataException,
     DropRowException,
     PhaserError,
     WarningException,
@@ -153,8 +152,9 @@ class DeltaMapping(UserDict):
 
     @staticmethod
     def _norm_key(key):
-        # pandas turns nullable int columns into float64 — "3" becomes 3.0;
-        # normalize integral floats so keys round-trip through JSON as "3".
+        # an integral float (3.0, e.g. read from a double column) and the
+        # int 3 name one counter: normalize so both round-trip through
+        # JSON as "3".
         # NaN/inf cannot normalize (int() raises) and cannot survive the
         # JSON merge either — reject them with the same clear error the
         # other bad key shapes get
@@ -202,6 +202,97 @@ class DeltaMapping(UserDict):
     def drain(self) -> dict:
         d, self.deltas = self.deltas, {}
         return d
+
+
+# --------------------------------------------------------------------------
+# Arrow row shell: batches to plain Python row dicts and back
+# --------------------------------------------------------------------------
+
+def _conv(c, v):
+    return v if c is None or v is None else c(v)
+
+
+def _converter(t: T.DataType, ts):
+    """Per-value converter for Spark type ``t`` (a row is a struct), or a
+    falsy value for a type holding no map and no timestamp.  ``ts``
+    converts a timestamp; a map becomes a ``dict`` (``to_pylist`` gives a
+    list of pairs)."""
+    if isinstance(t, T.TimestampType):
+        return ts
+    if isinstance(t, T.ArrayType):
+        el = _converter(t.elementType, ts)
+        return el and (lambda v: [_conv(el, x) for x in v])
+    if isinstance(t, T.MapType):
+        kc, vc = _converter(t.keyType, ts), _converter(t.valueType, ts)
+        return lambda v: {
+            _conv(kc, k): _conv(vc, x)
+            for k, x in (v.items() if isinstance(v, dict) else v)
+        }
+    if isinstance(t, T.StructType):
+        fields = {f.name: c for f in t.fields if (c := _converter(f.dataType, ts))}
+        return fields and (
+            lambda v: {**v, **{n: _conv(c, v.get(n)) for n, c in fields.items()}}
+        )
+    return None
+
+
+def batch_rows(schema: T.StructType):
+    """The row shell's way in: a function turning an Arrow batch of
+    ``schema`` into row dicts of plain Python values.  Arrow hands
+    timestamps over zone-aware in the session time zone; the row sees
+    them naive.  A schema with no map or timestamp converts nothing."""
+    conv = _converter(schema, lambda v: v.replace(tzinfo=None))
+
+    def rows(batch) -> list[dict]:
+        out = batch.to_pylist()
+        return [conv(r) for r in out] if conv else out
+
+    return rows
+
+
+def _arrow_column(values: list, typ):
+    """An Arrow array of ``typ``, with the coercions the earlier pandas
+    shell made: integers infer then cast safely (``"5"`` and ``3.0`` land
+    as 5 and 3, NaN as null; ``3.7`` raises, which a typed conversion
+    would truncate); other types that refuse a value fall back to that
+    cast, except strings, which take only strings."""
+    import pyarrow as pa
+
+    if pa.types.is_integer(typ):
+        return pa.array(values, from_pandas=True).cast(typ)
+    try:
+        return pa.array(values, type=typ)
+    except (pa.ArrowInvalid, pa.ArrowTypeError):
+        if pa.types.is_string(typ):
+            raise
+        return pa.array(values).cast(typ)
+
+
+def rows_batch(schema: T.StructType, session_tz: str):
+    """The row shell's way out: a function turning row dicts (a key per
+    ``schema`` column) into an Arrow batch of ``schema``.  A naive
+    timestamp is wall clock in ``session_tz``; an ambiguous one resolves
+    to standard time."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    def to_utc(v):
+        # pyarrow stores an aware datetime's wall clock as if it were UTC
+        if v.tzinfo is None:
+            v = zone.localize(v, is_dst=False)
+        return v.astimezone(datetime.timezone.utc)
+
+    conv = _converter(schema, to_utc)
+    # the pytz zone pyarrow itself reads the session's batches in
+    zone = pa.lib.string_to_tzinfo(session_tz) if conv else None
+    arrow = to_arrow_schema(schema)
+
+    def batch(rows: list[dict]):
+        rows = [conv(r) for r in rows] if conv else rows
+        cols = [_arrow_column([r[f.name] for r in rows], f.type) for f in arrow]
+        return pa.RecordBatch.from_arrays(cols, schema=arrow)
+
+    return batch
 
 
 # --------------------------------------------------------------------------
@@ -268,18 +359,27 @@ def infer_row_step_schema(df: DataFrame, fn, extra_kwargs: dict) -> T.StructType
     return T.StructType(fields)
 
 
+#: Python type -> the Spark type the row shell reads it back as (a naive
+#: ``datetime`` is a session-zone timestamp); ``bool`` before ``int``,
+#: ``datetime`` before ``date``, as each is the other's subclass
+_PY_TYPES = (
+    (bool, T.BooleanType), (int, T.LongType), (float, T.DoubleType),
+    (datetime.datetime, T.TimestampType), (datetime.date, T.DateType),
+    ((bytes, bytearray), T.BinaryType),
+)
+
+
 def _python_value_type(v) -> T.DataType:
-    if isinstance(v, bool):
-        return T.BooleanType()
-    if isinstance(v, int):
-        return T.LongType()
-    if isinstance(v, float):
-        return T.DoubleType()
+    for py, spark in _PY_TYPES:
+        if isinstance(v, py):
+            return spark()
     if isinstance(v, (list, tuple)):
         inner = _python_value_type(v[0]) if v else T.StringType()
         return T.ArrayType(inner)
     if isinstance(v, dict):
-        return T.MapType(T.StringType(), T.StringType())
+        # keyed and valued by its first item
+        k, x = next(iter(v.items()), ("", ""))
+        return T.MapType(_python_value_type(k), _python_value_type(x))
     return T.StringType()
 
 
@@ -294,7 +394,9 @@ def run_row_step(
     output_schema=None,
     strict_schemas: bool = False,
 ) -> DataFrame:
-    """Execute a row step distributed via ``mapInPandas``.
+    """Execute a row step distributed via ``mapInArrow``: each batch
+    becomes row dicts of plain Python values and goes back through the
+    output schema (:func:`batch_rows` / :func:`rows_batch`).
 
     Quarantined rows (non-null ``__phaser_error__``) pass through unchanged
     (reference ``phaser/phase.py:90-91``).  Exceptions map to markers:
@@ -336,33 +438,23 @@ def run_row_step(
     visible_names = [c for c in out_names if c not in INTERNAL_COLS and c != _EXTRA_DELTA_COL]
     ctx_vars = dict(context_vars or {})
     want_extras = tuple(extra_output_names)
+    to_rows = batch_rows(df.schema)
+    tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+    to_batch = rows_batch(out_schema, tz)
 
     def gen(batches):
-        import pandas as pd
-
         accs = {name: DeltaMapping() for name in want_extras}
-        exec_ctx = _ExecutorContext(ctx_vars)
-        for pdf in batches:
-            pdf = pdf.astype(object).where(pdf.notna(), None)
-            rows_out = []
-            for rec in pdf.to_dict("records"):
-                err = rec.get(ERROR_COL)
-                # no `or []`: two-plus accumulated warnings arrive as a
-                # numpy array, whose truth value raises (found by the
-                # randomized differential generator — any row warned twice
-                # before a row step crashed the whole stage)
-                prior_warnings = rec.get(WARNING_COL)
-                warnings = [] if prior_warnings is None else list(prior_warnings)
-                drop = bool(rec.get(DROP_COL) or False)
-                drop_step = rec.get(DROP_STEP_COL)
+        kwargs = {**base_kwargs, **accs}
+        if wants_ctx:
+            kwargs["context"] = _ExecutorContext(ctx_vars)
+        for batch in batches:
+            rows = to_rows(batch)
+            for rec in rows:
+                err, drop = rec.get(ERROR_COL), bool(rec.get(DROP_COL))
+                warnings = rec.get(WARNING_COL) or []
                 base = {k: rec.get(k) for k in visible_names}
                 deltas = None
                 if err is None and not drop:
-                    kwargs = dict(base_kwargs)
-                    if wants_ctx:
-                        kwargs["context"] = exec_ctx
-                    for name in want_extras:
-                        kwargs[name] = accs[name]
                     try:
                         newrow = fn(dict(base), **kwargs)
                         if not isinstance(newrow, dict):
@@ -378,70 +470,36 @@ def run_row_step(
                                 f"row_step {step_name} changed {PHASER_ROW_NUM} "
                                 "(reference phaser/steps.py:120-127 forbids this)"
                             )
-                        merged = dict(base)
-                        merged.update(newrow)
-                        base = {k: merged.get(k) for k in visible_names}
-                        if want_extras:
-                            deltas = {
-                                n: accs[n].drain() for n in want_extras
-                            }
+                        base.update((k, newrow[k]) for k in visible_names if k in newrow)
                     except DropRowException as e:
                         drop = True
                         warnings.append(
-                            {
-                                "type": "DROPPED_ROW",
-                                "column": None,
-                                "step": step_name,
-                                "message": str(e) or "row dropped",
-                                "policy": None,
-                            }
+                            _event("DROPPED_ROW", step_name, str(e) or "row dropped")
                         )
-                        for n in want_extras:
-                            accs[n].drain()  # discard this row's partial updates
                     except WarningException as e:
-                        warnings.append(
-                            {
-                                "type": EVENT_WARNING,
-                                "column": None,
-                                "step": step_name,
-                                "message": str(e),
-                                "policy": None,
-                            }
-                        )
-                        if want_extras:
-                            deltas = {n: accs[n].drain() for n in want_extras}
+                        warnings.append(_event(EVENT_WARNING, step_name, str(e)))
                     except PhaserError:
                         raise
                     except Exception as e:  # DataException & arbitrary errors
-                        err = {
-                            "type": EVENT_ERROR,
-                            "column": None,
-                            "step": step_name,
-                            "message": f"{type(e).__name__}: {e}",
-                            "policy": None,
-                        }
-                        for n in want_extras:
-                            accs[n].drain()
-                out = dict.fromkeys(out_names)
-                out.update(base)
-                out[ERROR_COL] = err
-                out[WARNING_COL] = warnings
-                out[DROP_COL] = drop
-                # preserve drop attribution: dict.fromkeys(out_names)
-                # would otherwise reset it to None and the deferred
-                # 'step X dropped N rows' count would read 0
-                out[DROP_STEP_COL] = drop_step
-                # same for the swept flag (errored-row visibility to
-                # later batch steps — set at row-step entry in phase.py)
-                if SWEPT_COL in out_names:
-                    out[SWEPT_COL] = bool(rec.get(SWEPT_COL) or False)
+                        err = _event(EVENT_ERROR, step_name, f"{type(e).__name__}: {e}")
+                    # a dropped or errored row's partial updates are discarded
+                    drained = {n: accs[n].drain() for n in want_extras}
+                    if err is None and not drop:
+                        deltas = drained
+                # the row's other columns (the drop attribution, the swept
+                # flag) pass through as they came in
+                rec.update(base)
+                rec[ERROR_COL], rec[WARNING_COL], rec[DROP_COL] = err, warnings, drop
                 if want_extras:
-                    out[_EXTRA_DELTA_COL] = json.dumps(deltas) if deltas else None
-                rows_out.append(out)
-            yield pd.DataFrame(rows_out, columns=out_names)
+                    rec[_EXTRA_DELTA_COL] = json.dumps(deltas) if deltas else None
+            yield to_batch(rows)
 
-    result = df.mapInPandas(gen, schema=out_schema)
-    return result
+    return df.mapInArrow(gen, schema=out_schema)
+
+
+def _event(kind: str, step: str, message: str) -> dict:
+    return {"type": kind, "column": None, "step": step, "message": message,
+            "policy": None}
 
 
 class _ExecutorContext:

@@ -135,6 +135,17 @@ def test_fix_value_fn_callable(spark):
     assert val(df, "c") == ["cba"]
 
 
+def test_fix_value_fn_callable_gets_ints_beside_nulls(spark):
+    """An IntColumn fix callable gets Python ints and is never called with
+    a null, even when nulls share its Arrow batch (a pandas UDF hands it
+    2.0 there, and ``"ab" * 2.0`` raises)."""
+    rows = [(None if i % 3 == 0 else str(i),) for i in range(60)]
+    df = run_cols(
+        spark, [IntColumn("n", fix_value_fn=lambda v: len("ab" * v))], rows, ["n"]
+    )
+    assert val(df, "n") == [None if i % 3 == 0 else 2 * i for i in range(60)]
+
+
 def test_first_failing_column_wins(spark):
     # row fails both columns; declared order decides the recorded error (E4)
     df = run_cols(

@@ -248,7 +248,10 @@ def test_lang_id_english_detection(spark):
 
 def test_multimodal_plumbing(spark, docs):
     wrapped = multimodal.attach_binary(docs.filter(F.col("doc_id") == 1), "text")
+    # an existing features column is replaced in place, as withColumn does
+    wrapped = wrapped.select(F.lit("stale").alias("features"), "*")
     feat = multimodal.decode_and_featurize(wrapped)
+    assert feat.columns == wrapped.columns + ["content_sha256"]
     row = feat.collect()[0]
     assert len(row["features"]) == multimodal.FEATURE_DIM
     assert all(0.0 <= v <= 1.0 for v in row["features"])
@@ -1162,9 +1165,10 @@ def test_pca_fit_project_and_whiten(spark):
 
 
 def test_pca_project_arrow_path_and_dirty_rows(spark):
-    """Models past the literal-plan budget run the Arrow matmul; dirty
-    vectors get a NULL projection there (matching the literal path's
-    null rule)."""
+    """Models past the literal-plan budget run the Arrow matmul under the
+    shared dirty-row rule: a null vector, a wrong length or a null element
+    gives a NULL projection, a NaN element computes through.  An existing
+    ``out_col`` is replaced in place, as ``withColumn`` does."""
     import random as _r
 
     import numpy as np
@@ -1177,12 +1181,21 @@ def test_pca_project_arrow_path_and_dirty_rows(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     model = emb.pca_fit(df, k=k, exact=False)
     dirty = spark.createDataFrame(
-        rows[:3] + [(99, None), (98, [1.0, 2.0])],
-        "vec_id long, embedding array<double>",
+        [(i, "stale", v) for i, v in rows[:3]] + [
+            (99, "stale", None),
+            (98, "stale", [1.0, 2.0]),
+            (97, "stale", rows[0][1] + [0.5]),
+            (96, "stale", rows[0][1][:-1] + [None]),
+            (95, "stale", rows[0][1][:-1] + [float("nan")]),
+        ],
+        "vec_id long, p string, embedding array<double>",
     )
-    out = {r.vec_id: r.p for r in
-           emb.pca_project(dirty, model, out_col="p").collect()}
+    projected = emb.pca_project(dirty, model, out_col="p")
+    assert projected.columns == ["vec_id", "p", "embedding"]
+    out = {r.vec_id: r.p for r in projected.collect()}
     assert out[99] is None and out[98] is None
+    assert out[97] is None and out[96] is None
+    assert len(out[95]) == k and all(np.isnan(out[95]))
     V = np.array(rows[0][1])
     want = (V - np.array(model["mean"])) @ np.array(model["components"]).T
     assert np.allclose(np.array(out[0]), want, atol=1e-9)

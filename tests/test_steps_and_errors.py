@@ -591,8 +591,8 @@ def test_batch_step_removal_keeps_recorded_events(spark):
 
 
 def test_delta_mapping_key_normalization_and_bad_keys():
-    """Counter keys: integral floats normalize to ints (pandas float64
-    round-trip), non-finite floats and compound keys fail loud with a
+    """Counter keys: integral floats normalize to ints (3.0 and 3 name one
+    counter), non-finite floats and compound keys fail loud with a
     PhaserError instead of crashing later in the executor's JSON merge."""
     import math
 
@@ -617,10 +617,11 @@ def test_delta_mapping_key_normalization_and_bad_keys():
 
 
 def test_row_step_survives_multiple_prior_warnings(spark):
-    """A row that accumulated TWO OR MORE warnings arrives at the next
-    row step with its warnings as a numpy array — whose truth value
-    raises if touched with `or`.  Regression for the stage-crash the
-    randomized differential generator found: the warned row must flow
+    """A row that accumulated TWO OR MORE warnings reaches the next row
+    step intact.  Regression for the stage-crash the randomized
+    differential generator found under the earlier pandas shell (the
+    warnings arrived as a numpy array, whose truth value raises): the
+    warned row must flow
     through later row steps (warnings never cause the error-skip), and
     both warnings must survive to the report."""
     from phaser_spark import Phase, WarningException, row_step
