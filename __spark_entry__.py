@@ -316,7 +316,6 @@ def o2_dedup_keep_last(spark, sf_dir):
         name="dedup",
         steps=[drop_duplicate_rows(columns=["l_orderkey"])],
         context=Context(spark=spark),
-        lineage_cache=False,
     )
     out = ph.run(li)
     # Phase.run returns the full marker-carrying frame; user-visible rows
@@ -342,7 +341,6 @@ def p4_filter_rows(spark, sf_dir):
         name="filter",
         steps=[filter_rows(F.col("l_quantity") >= 45)],
         context=Context(spark=spark),
-        lineage_cache=False,
     )
     return (
         ph.run(li)
@@ -379,7 +377,6 @@ def p1_column_casts(spark, sf_dir):
             DateColumn("ship"),
         ],
         context=Context(spark=spark),
-        lineage_cache=False,
     )
     out = ph.run(src)
     return out.select(
@@ -400,7 +397,6 @@ def e1_quarantine_events(spark, sf_dir):
         columns=[FloatColumn("o_totalprice", min_value=50000.0)],
         context=Context(spark=spark),
         error_policy=ON_ERROR_DROP_ROW,
-        lineage_cache=False,
     )
     out = ph.run(orders)
     ev = extract_events(out, "guard")
@@ -577,7 +573,6 @@ def u1_row_step_derive(spark, sf_dir):
         name="derive",
         steps=[classify],
         context=Context(spark=spark),
-        lineage_cache=False,
     )
     out = ph.run(orders)
     return out.filter(~F.col(DROP_COL)).select("o_orderkey", "tier", "doubled")
@@ -600,7 +595,6 @@ def u2_batch_step(spark, sf_dir):
         name="batch",
         steps=[keep_high_value],
         context=Context(spark=spark),
-        lineage_cache=False,
     )
     return ph.run(orders).select("o_orderkey", "price_k")
 
@@ -626,7 +620,6 @@ def u5_lookup_enrichment(spark, sf_dir):
         steps=[enrich],
         extra_sources=["nation_names"],
         context=c,
-        lineage_cache=False,
     )
     cust = _t(spark, sf_dir, "customer", spread=False)
     return ph.run(cust).select("c_custkey", "nation_name")
@@ -992,7 +985,6 @@ def u8_fix_functions(spark, sf_dir):
             FloatColumn("bal", fix_value_fn="abs"),
         ],
         context=Context(spark=spark),
-        lineage_cache=False,
     )
     out = ph.run(src)
     return out.select(
@@ -1028,7 +1020,6 @@ def s1_csv_roundtrip(spark, sf_dir):
             Column("c_mktsegment"),
         ],
         context=Context(spark=spark),
-        lineage_cache=False,
     )
     out = ph.run(back)
     return out.select(

@@ -120,7 +120,10 @@ def filter_rows(func: Callable | SparkCol, name: str = "filter_rows"):
             # every other column passes through as Arrow, unconverted
             data_cols = _data_columns(df) + [PHASER_ROW_NUM]
             has_swept = SWEPT_COL in df.columns
-            to_rows = batch_rows(T.StructType([df.schema[c] for c in data_cols]))
+            to_rows = batch_rows(
+                T.StructType([df.schema[c] for c in data_cols]),
+                df.sparkSession.conf.get("spark.sql.session.timeZone"),
+            )
 
             def gen(batches):
                 import pyarrow as pa

@@ -17,8 +17,11 @@ Scale notes: reads go through Spark's native distributed CSV/JSON readers
 (splittable, pushdown-capable); ragged-row detection rides the reader's
 ``_corrupt_record`` channel instead of a second parse; row numbering uses
 the zero-shuffle lineage utility.  Single-file sinks exist for CLI parity
-(they stream part-files together driver-side without materializing rows in
-memory); production output should use ``save_parquet``.
+(``coalesce(1)`` writes one part file, moved into place or streamed into a
+JSON array without materializing rows in memory); production output should
+use ``save_parquet``.  A row step reads an ``ExtraRecords`` /
+``ExtraMapping`` through the row shell (``steps.collect_rows``), so its
+records hold the same plain values as the step's own rows.
 """
 
 from __future__ import annotations
@@ -44,6 +47,7 @@ from .constants import (
 )
 from .exceptions import DataException, PhaserError
 from .lineage import with_row_numbers
+from .steps import collect_rows
 
 # Sentinel that never appears in real data: lets quoted "" survive as an
 # empty string (phaser keeps blanks distinct from nulls — phaser/io.py:115-162).
@@ -389,22 +393,33 @@ def _stringify_complex(df: DataFrame) -> DataFrame:
     return out
 
 
-def _collect_parts(tmp: str, pattern: str, filename: str, header_lines: int = 0) -> None:
-    """Stream Spark part-files into one output file without loading rows."""
-    parts = sorted(glob.glob(os.path.join(tmp, pattern)))
-    with open(filename, "wb") as out:
-        for i, part in enumerate(parts):
-            with open(part, "rb") as f:
-                if i > 0 and header_lines:
-                    for _ in range(header_lines):
-                        f.readline()
-                shutil.copyfileobj(f, out)
+def _save_single_file(df: DataFrame, filename: str, fmt: str,
+                      json_array: bool = False, **opts) -> None:
+    """Write ``df`` as one ``fmt`` file: ``coalesce(1)`` writes exactly
+    one part file (``maxRecordsPerFile=0`` overrides a session cap), moved
+    into place, or with ``json_array`` streamed into a top-level array."""
+    tmp = tempfile.mkdtemp(prefix=f"phaser_{fmt}_")
+    try:
+        df.coalesce(1).write.mode("overwrite").options(
+            maxRecordsPerFile=0, **opts
+        ).format(fmt).save(tmp)
+        (part,) = glob.glob(os.path.join(tmp, "part-*"))
+        if not json_array:
+            shutil.move(part, filename)
+            return
+        with open(part, encoding="utf-8") as f, open(filename, "w", encoding="utf-8") as out:
+            out.write("[")
+            for i, line in enumerate(filter(str.strip, f)):
+                out.write((",\n" if i else "") + line.strip())
+            out.write("]")
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def save_csv(df: DataFrame, filename: str, single_file: bool = True) -> None:
     """CSV sink (phaser/io.py:164-190): nulls → empty string, lists
-    stringified; one output file for CLI parity (part-files streamed
-    together driver-side, no row materialization).
+    stringified; one output file for CLI parity (the single part file
+    moved into place, no row materialization).
 
     Spark's CSV writer TRIMS leading/trailing whitespace by default
     (write-side ``ignoreLeading/TrailingWhiteSpace`` default to true) —
@@ -420,42 +435,18 @@ def save_csv(df: DataFrame, filename: str, single_file: bool = True) -> None:
         ignoreTrailingWhiteSpace=False,
     )
     if single_file:
-        tmp = tempfile.mkdtemp(prefix="phaser_csv_")
-        try:
-            out.coalesce(1).write.mode("overwrite").options(**opts).csv(tmp)
-            _collect_parts(tmp, "part-*.csv", filename, header_lines=1)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+        _save_single_file(out, filename, "csv", **opts)
     else:
         out.write.mode("overwrite").options(**opts).csv(filename)
 
 
 def save_json(df: DataFrame, filename: str, single_file: bool = True) -> None:
     """JSON sink: a single top-level array (phaser/io.py:29-31), built by
-    streaming NDJSON part-files — constant driver memory."""
+    streaming the NDJSON part file — constant driver memory."""
     if not single_file:
         df.write.mode("overwrite").json(filename)
         return
-    tmp = tempfile.mkdtemp(prefix="phaser_json_")
-    try:
-        df.coalesce(1).write.mode("overwrite").json(tmp)
-        parts = sorted(glob.glob(os.path.join(tmp, "part-*")))
-        with open(filename, "w", encoding="utf-8") as out:
-            out.write("[")
-            first = True
-            for part in parts:
-                with open(part, encoding="utf-8") as f:
-                    for line in f:
-                        line = line.strip()
-                        if not line:
-                            continue
-                        if not first:
-                            out.write(",\n")
-                        out.write(line)
-                        first = False
-            out.write("]")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    _save_single_file(df, filename, "json", json_array=True)
 
 
 def read_jsonl(
@@ -505,23 +496,12 @@ def read_jsonl(
 def save_jsonl(df: DataFrame, filename: str, single_file: bool = True) -> None:
     """NDJSON sink: one JSON object per line.  ``single_file=False``
     writes a part-file directory (the cluster path — each task streams
-    its own split); ``single_file=True`` concatenates parts with
-    constant driver memory (the reference-parity convenience path)."""
+    its own split); ``single_file=True`` moves the single part file into
+    place (the reference-parity convenience path)."""
     if not single_file:
         df.write.mode("overwrite").json(filename)
         return
-    tmp = tempfile.mkdtemp(prefix="phaser_jsonl_")
-    try:
-        df.coalesce(1).write.mode("overwrite").json(tmp)
-        parts = sorted(glob.glob(os.path.join(tmp, "part-*")))
-        with open(filename, "w", encoding="utf-8") as out:
-            for part in parts:
-                with open(part, encoding="utf-8") as f:
-                    for line in f:
-                        if line.strip():
-                            out.write(line if line.endswith("\n") else line + "\n")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    _save_single_file(df, filename, "json")
 
 
 def save_parquet_bucketed(
@@ -1063,7 +1043,8 @@ class ExtraMapping(SavableObject):
         self.df = df.select(F.col(f"`{cols[0]}`").alias("key"), F.col(f"`{cols[1]}`").alias("value"))
 
     def to_dict(self) -> dict:
-        """Driver-side dict for small maps (broadcast into row steps).
+        """Driver-side dict for small maps (broadcast into row steps),
+        its values read through the row shell (``steps.collect_rows``).
 
         Bounded: materializing the mapping pulls every row into the
         driver AND into every task closure, so maps past
@@ -1073,7 +1054,7 @@ class ExtraMapping(SavableObject):
         """
         if self.df is None:
             return {}
-        rows = self.df.limit(ROW_STEP_SOURCE_MAX_ROWS + 1).collect()
+        rows = collect_rows(self.df, ROW_STEP_SOURCE_MAX_ROWS + 1)
         if len(rows) > ROW_STEP_SOURCE_MAX_ROWS:
             raise PhaserError(
                 f"ExtraMapping {self.name!r} has more than "

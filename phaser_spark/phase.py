@@ -58,6 +58,7 @@ from .steps import (
     CONTEXT_STEP,
     DATAFRAME_STEP,
     ROW_STEP,
+    collect_rows,
     extract_extra_output_deltas,
     run_row_step,
     step_type_of,
@@ -124,7 +125,6 @@ class Phase:
         extra_sources: list | None = None,
         extra_outputs: list | None = None,
         error_policy: str | None = None,
-        lineage_cache: bool | None = None,
         checkpoint_bucket_by: list[str] | None = None,
         checkpoint_num_buckets: int | None = None,
         checkpoint_sort_by: list[str] | None = None,
@@ -146,11 +146,6 @@ class Phase:
         self.error_policy = normalize_policy(
             error_policy or type(self).error_policy, where="error_policy"
         )
-        # lineage_cache: None (default) = decide automatically — pin the
-        # input for row numbering only when the plan is NOT a deterministic
-        # scan (see lineage._is_deterministic_narrow_plan); a .cache() of a
-        # 100 TB file source is itself a scale problem.  True/False force.
-        self.lineage_cache = lineage_cache
         # checkpoint_bucket_by: when set, the Pipeline materializes this
         # phase's checkpoint as a BUCKETED parquet table on these columns
         # (io.save_parquet_bucketed) instead of a plain directory — every
@@ -274,9 +269,9 @@ class Phase:
         # each phase starts in checkpoint (row-number) order; an in-phase
         # sort_by re-establishes this for order-consuming steps
         self.context.sort_state = None
-        df = with_row_numbers(
-            self.df, cache=self.lineage_cache, pins=self.context.pinned_inputs
-        )
+        # the input is pinned for numbering only when its plan is not a
+        # deterministic scan (lineage._is_deterministic_narrow_plan)
+        df = with_row_numbers(self.df, pins=self.context.pinned_inputs)
         # numbering is pinned to ingest order above; from here on the plan is
         # order-free (everything keys off __phaser_row_num__), so fan a
         # narrow scan out across cores before the column/step projections —
@@ -559,7 +554,7 @@ class Phase:
             return TolerantDict(obj.to_dict())
         if obj.df is None:
             return []
-        rows = obj.df.limit(ROW_STEP_SOURCE_MAX_ROWS + 1).collect()
+        rows = collect_rows(obj.df, ROW_STEP_SOURCE_MAX_ROWS + 1)
         if len(rows) > ROW_STEP_SOURCE_MAX_ROWS:
             raise PhaserError(
                 f"Extra source {obj.name!r} has more than "
@@ -570,7 +565,7 @@ class Phase:
                 "via PHASER_SPARK_ROW_STEP_SOURCE_MAX_ROWS only if every "
                 "executor can hold the whole source in memory.)"
             )
-        return [r.asDict(recursive=True) for r in rows]
+        return rows
 
     def _run_steps(self, df: DataFrame) -> DataFrame:
         declared_outputs = {o.name: o for o in self.extra_outputs}

@@ -66,6 +66,7 @@ from .io import (
 )
 from .lineage import with_row_numbers
 from .phase import Phase
+from .plan import CODEGEN_PROBE_MIN_WEIGHT, codegen_weight, warn_if_codegen_fallback
 
 
 #: partition column of run_stream's per-micro-batch output layout
@@ -174,7 +175,6 @@ class Pipeline:
         name: str = "pipeline",
         spark: SparkSession | None = None,
         strict_schemas: bool = False,
-        codegen_probe: bool = True,
     ):
         self.name = name if name != "pipeline" else (type(self).__name__ or name)
         self.working_dir = working_dir
@@ -203,11 +203,6 @@ class Pipeline:
         # known, by id() (each entry holds its frame, so an id is never
         # reused while its entry exists)
         self._phase_events: dict[int, _PhaseEvents] = {}
-        # test-compile each phase's fused stages before materializing and
-        # warn on janino fallback (r11 differential sweep: an all-axes
-        # phase can exceed the JVM's 64 KB method limit and silently run
-        # interpreted) — False skips the probe's per-phase compile cost
-        self.codegen_probe = codegen_probe
         self.check_output_collision()
 
     @property
@@ -330,17 +325,12 @@ class Pipeline:
 
     def run_phase(self, ph: Phase, df: DataFrame) -> DataFrame:
         out = ph.run(df)
-        if getattr(self, "codegen_probe", True):
-            from .plan import (
-                CODEGEN_PROBE_MIN_WEIGHT,
-                codegen_weight,
-                warn_if_codegen_fallback,
-            )
-
-            # exact janino test-compile, gated on a cheap static weight
-            # so ordinary narrow phases never pay the probe's compile
-            if codegen_weight(getattr(ph, "columns", None)) >= CODEGEN_PROBE_MIN_WEIGHT:
-                warn_if_codegen_fallback(out, f"phase {ph.name}")
+        # test-compile the phase's fused stages and warn on janino fallback
+        # (an all-axes phase can exceed the JVM's 64 KB method limit and
+        # silently run interpreted), gated on a cheap static weight so
+        # ordinary narrow phases never pay the compile
+        if codegen_weight(getattr(ph, "columns", None)) >= CODEGEN_PROBE_MIN_WEIGHT:
+            warn_if_codegen_fallback(out, f"phase {ph.name}")
         # Materialize exactly once: the internal parquet checkpoint, whose
         # write also observes the phase's numbers
         drop_tags = self.context.drop_tags(ph.name)

@@ -117,7 +117,7 @@ def codegen_compile_report(df: DataFrame) -> list[dict]:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         # a fresh Dataset replans under the now-current conf; the
         # original df's memoized AQE plan is untouched
-        qe = df.alias("__codegen_probe__")._jdf.queryExecution()
+        qe = df.alias("__codegen_check__")._jdf.queryExecution()
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "codegen"
         )

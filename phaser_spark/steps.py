@@ -236,18 +236,30 @@ def _converter(t: T.DataType, ts):
     return None
 
 
-def batch_rows(schema: T.StructType):
-    """The row shell's way in: a function turning an Arrow batch of
-    ``schema`` into row dicts of plain Python values.  Arrow hands
-    timestamps over zone-aware in the session time zone; the row sees
-    them naive.  A schema with no map or timestamp converts nothing."""
-    conv = _converter(schema, lambda v: v.replace(tzinfo=None))
+def batch_rows(schema: T.StructType, session_tz: str):
+    """The row shell's way in: a function turning an Arrow batch (or
+    table) of ``schema`` into row dicts of plain Python values.  Arrow
+    hands timestamps over zone-aware (in the session zone to a worker, in
+    UTC to a driver collect); the row sees them as naive wall clock in
+    ``session_tz``.  A schema with no map or timestamp converts nothing."""
+    import pyarrow as pa
+
+    conv = _converter(schema, lambda v: v.astimezone(zone).replace(tzinfo=None))
+    zone = pa.lib.string_to_tzinfo(session_tz) if conv else None
 
     def rows(batch) -> list[dict]:
         out = batch.to_pylist()
         return [conv(r) for r in out] if conv else out
 
     return rows
+
+
+def collect_rows(df: DataFrame, n: int) -> list[dict]:
+    """The first ``n`` rows of ``df`` on the driver, with the values the
+    row shell hands the workers' functions (:func:`batch_rows`): the jobs
+    of ``limit(n).collect()``, plus a stage of one task per partition."""
+    tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+    return batch_rows(df.schema, tz)(df.limit(n).toArrow())
 
 
 def _arrow_column(values: list, typ):
@@ -316,14 +328,16 @@ def _merge_schemas(in_schema: T.StructType, declared) -> T.StructType:
 _INFER_WARNED: set = set()
 
 
-def infer_row_step_schema(df: DataFrame, fn, extra_kwargs: dict) -> T.StructType:
-    """Sample-based output-schema inference for steps that add columns.
+def infer_row_step_schema(df: DataFrame, fn, loop) -> T.StructType:
+    """Sample-based output-schema inference for steps that add columns:
+    ``loop`` (:func:`_row_loop`) runs ``fn`` on the first 10 rows it will
+    be called on, read through the row shell (:func:`collect_rows`).
 
-    One tiny driver job (``limit(10)``) — documented cost of the dynamic
-    dict API; declare ``output_schema=`` to skip it.  Bounded, but a
-    silent driver action and a sampling hazard (a column the first 10
-    rows never populate is missed, and a type the sample under-represents
-    is guessed wrong), so it warns once per step.
+    One tiny driver job — documented cost of the dynamic dict API;
+    declare ``output_schema=`` to skip it.  Bounded, but a silent driver
+    action and a sampling hazard (a column the first 10 rows never
+    populate is missed, and a type the sample under-represents is guessed
+    wrong), so it warns once per step.
     """
     key = (getattr(fn, "__module__", ""), getattr(fn, "__qualname__", repr(fn)))
     if key not in _INFER_WARNED:
@@ -332,26 +346,19 @@ def infer_row_step_schema(df: DataFrame, fn, extra_kwargs: dict) -> T.StructType
 
         warnings.warn(
             f"row_step {getattr(fn, '__name__', fn)!r} declares no "
-            "output_schema: inferring added columns from a 10-row driver-"
-            "side sample. Columns/types the sample misses are dropped or "
-            "mistyped — declare output_schema=\"col type, ...\" for "
-            "deterministic schemas (and to skip the sampling job).",
+            "output_schema: inferring added columns from the first 10 rows "
+            "it will be called on, sampled on the driver. Columns/types the "
+            "sample misses are dropped or mistyped — declare "
+            "output_schema=\"col type, ...\" for deterministic schemas (and "
+            "to skip the sampling job).",
             stacklevel=3,
         )
-    visible = df.drop(*[c for c in INTERNAL_COLS if c in df.columns])
-    sample = [r.asDict(recursive=True) for r in visible.limit(10).collect()]
+    live = df.filter(F.col(ERROR_COL).isNull() & ~F.col(DROP_COL))
+    names = [c for c in df.columns if c not in INTERNAL_COLS]
     new_fields: dict[str, T.DataType] = {}
-    for rec in sample:
-        try:
-            out = fn(dict(rec), **extra_kwargs)
-        except Exception:
-            continue
-        if not isinstance(out, dict):
-            raise PhaserError(
-                f"row_step {fn.__name__} must return a Mapping, got {type(out)}"
-            )
+    for out in loop(collect_rows(live, 10), names):
         for k, v in out.items():
-            if k not in visible.columns and k not in new_fields and v is not None:
+            if k not in df.columns and k not in new_fields and v is not None:
                 new_fields[k] = _python_value_type(v)
     fields = list(df.schema.fields)
     for k, t in new_fields.items():
@@ -383,6 +390,72 @@ def _python_value_type(v) -> T.DataType:
     return T.StringType()
 
 
+def _row_loop(fn, step_name: str, sources: dict, extra_outputs: tuple,
+              context_vars: dict):
+    """The one loop running a row function, set up per worker partition
+    and for the schema probe.  ``loop(rows, names)`` calls ``fn`` on the
+    ``names`` columns of each row dict with no error and no drop flag,
+    updates the row in place and returns what ``fn`` returned.  An
+    exception maps to a marker: ``DropRowException`` → drop flag,
+    ``WarningException`` → warning list, other ``Exception`` → error
+    struct; a ``PhaserError`` propagates (reference "never swallowed",
+    ``phaser/exceptions.py:29-35``)."""
+    accs = {name: DeltaMapping() for name in extra_outputs}
+    kwargs = {**sources, **accs}
+    if _wants_context(fn):
+        kwargs["context"] = _ExecutorContext(context_vars)
+
+    def loop(rows: list[dict], names: list[str]) -> list[dict]:
+        returned = []
+        for rec in rows:
+            err, drop = rec.get(ERROR_COL), bool(rec.get(DROP_COL))
+            warnings = rec.get(WARNING_COL) or []
+            base = {k: rec.get(k) for k in names}
+            deltas = None
+            if err is None and not drop:
+                try:
+                    newrow = fn(dict(base), **kwargs)
+                    if not isinstance(newrow, dict):
+                        raise PhaserError(
+                            f"row_step {step_name} must return a Mapping, "
+                            f"got {type(newrow)}"
+                        )
+                    if (
+                        PHASER_ROW_NUM in newrow
+                        and newrow[PHASER_ROW_NUM] != base.get(PHASER_ROW_NUM)
+                    ):
+                        raise PhaserError(
+                            f"row_step {step_name} changed {PHASER_ROW_NUM} "
+                            "(reference phaser/steps.py:120-127 forbids this)"
+                        )
+                    base.update((k, newrow[k]) for k in names if k in newrow)
+                    returned.append(newrow)
+                except DropRowException as e:
+                    drop = True
+                    warnings.append(
+                        _event("DROPPED_ROW", step_name, str(e) or "row dropped")
+                    )
+                except WarningException as e:
+                    warnings.append(_event(EVENT_WARNING, step_name, str(e)))
+                except PhaserError:
+                    raise
+                except Exception as e:  # DataException & arbitrary errors
+                    err = _event(EVENT_ERROR, step_name, f"{type(e).__name__}: {e}")
+                # a dropped or errored row's partial updates are discarded
+                drained = {n: acc.drain() for n, acc in accs.items()}
+                if err is None and not drop:
+                    deltas = drained
+            # the row's other columns (the drop attribution, the swept
+            # flag) pass through as they came in
+            rec.update(base)
+            rec[ERROR_COL], rec[WARNING_COL], rec[DROP_COL] = err, warnings, drop
+            if accs:
+                rec[_EXTRA_DELTA_COL] = json.dumps(deltas) if deltas else None
+        return returned
+
+    return loop
+
+
 def run_row_step(
     df: DataFrame,
     fn,
@@ -395,20 +468,18 @@ def run_row_step(
     strict_schemas: bool = False,
 ) -> DataFrame:
     """Execute a row step distributed via ``mapInArrow``: each batch
-    becomes row dicts of plain Python values and goes back through the
-    output schema (:func:`batch_rows` / :func:`rows_batch`).
+    becomes row dicts of plain Python values, goes through
+    :func:`_row_loop` and back through the output schema
+    (:func:`batch_rows` / :func:`rows_batch`).
 
     Quarantined rows (non-null ``__phaser_error__``) pass through unchanged
-    (reference ``phaser/phase.py:90-91``).  Exceptions map to markers:
-    ``DropRowException`` → drop flag, ``WarningException`` → warning list,
-    other ``DataException``/``Exception`` → error struct (policy applied at
-    phase end); ``PhaserError`` propagates and fails the job (reference
-    "never swallowed", ``phaser/exceptions.py:29-35``).
+    (reference ``phaser/phase.py:90-91``); a ``PhaserError`` fails the job,
+    or the build when the schema probe's sample raises it.
     """
-    extra_source_values = extra_source_values or {}
+    # the sources and context variables as they are when the plan is built
+    loop_args = (fn, step_name, dict(extra_source_values or {}),
+                 tuple(extra_output_names), dict(context_vars or {}))
     declared = getattr(fn, "__phaser_output_schema__", None) or output_schema
-    base_kwargs = dict(extra_source_values)
-    wants_ctx = _wants_context(fn)
 
     if declared is None and strict_schemas:
         # at 100 TB a column the 10-row sample never sees is dropped with
@@ -422,12 +493,7 @@ def run_row_step(
     if declared is not None:
         out_schema = _merge_schemas(df.schema, declared)
     else:
-        probe_kwargs = dict(base_kwargs)
-        if wants_ctx:
-            probe_kwargs["context"] = _ExecutorContext(context_vars or {})
-        for name in extra_output_names:
-            probe_kwargs[name] = DeltaMapping()
-        out_schema = infer_row_step_schema(df, fn, probe_kwargs)
+        out_schema = infer_row_step_schema(df, fn, _row_loop(*loop_args))
 
     if extra_output_names:
         out_schema = T.StructType(
@@ -436,62 +502,15 @@ def run_row_step(
 
     out_names = [f.name for f in out_schema.fields]
     visible_names = [c for c in out_names if c not in INTERNAL_COLS and c != _EXTRA_DELTA_COL]
-    ctx_vars = dict(context_vars or {})
-    want_extras = tuple(extra_output_names)
-    to_rows = batch_rows(df.schema)
     tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+    to_rows = batch_rows(df.schema, tz)
     to_batch = rows_batch(out_schema, tz)
 
     def gen(batches):
-        accs = {name: DeltaMapping() for name in want_extras}
-        kwargs = {**base_kwargs, **accs}
-        if wants_ctx:
-            kwargs["context"] = _ExecutorContext(ctx_vars)
+        loop = _row_loop(*loop_args)
         for batch in batches:
             rows = to_rows(batch)
-            for rec in rows:
-                err, drop = rec.get(ERROR_COL), bool(rec.get(DROP_COL))
-                warnings = rec.get(WARNING_COL) or []
-                base = {k: rec.get(k) for k in visible_names}
-                deltas = None
-                if err is None and not drop:
-                    try:
-                        newrow = fn(dict(base), **kwargs)
-                        if not isinstance(newrow, dict):
-                            raise PhaserError(
-                                f"row_step {step_name} must return a Mapping, "
-                                f"got {type(newrow)}"
-                            )
-                        if (
-                            PHASER_ROW_NUM in newrow
-                            and newrow[PHASER_ROW_NUM] != base.get(PHASER_ROW_NUM)
-                        ):
-                            raise PhaserError(
-                                f"row_step {step_name} changed {PHASER_ROW_NUM} "
-                                "(reference phaser/steps.py:120-127 forbids this)"
-                            )
-                        base.update((k, newrow[k]) for k in visible_names if k in newrow)
-                    except DropRowException as e:
-                        drop = True
-                        warnings.append(
-                            _event("DROPPED_ROW", step_name, str(e) or "row dropped")
-                        )
-                    except WarningException as e:
-                        warnings.append(_event(EVENT_WARNING, step_name, str(e)))
-                    except PhaserError:
-                        raise
-                    except Exception as e:  # DataException & arbitrary errors
-                        err = _event(EVENT_ERROR, step_name, f"{type(e).__name__}: {e}")
-                    # a dropped or errored row's partial updates are discarded
-                    drained = {n: accs[n].drain() for n in want_extras}
-                    if err is None and not drop:
-                        deltas = drained
-                # the row's other columns (the drop attribution, the swept
-                # flag) pass through as they came in
-                rec.update(base)
-                rec[ERROR_COL], rec[WARNING_COL], rec[DROP_COL] = err, warnings, drop
-                if want_extras:
-                    rec[_EXTRA_DELTA_COL] = json.dumps(deltas) if deltas else None
+            loop(rows, visible_names)
             yield to_batch(rows)
 
     return df.mapInArrow(gen, schema=out_schema)

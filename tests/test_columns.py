@@ -182,7 +182,7 @@ def test_datetime_default_tz(spark):
 
     df = spark.createDataFrame([("2024-06-01T12:00:00",)], ["t"])
     ph = Phase(name="tz", columns=[DateTimeColumn("t", default_tz="America/New_York")],
-               context=Context(spark=spark), lineage_cache=False)
+               context=Context(spark=spark))
     out = ph.run(df).select("t").collect()
     # noon EDT == 16:00 UTC (session tz is UTC)
     assert out[0].t.hour == 16
@@ -206,7 +206,6 @@ def test_datetime_default_tz_format_decides_not_value_suffix(spark):
             )
         ],
         context=Context(spark=spark),
-        lineage_cache=False,
     )
     out = ph.run(df).select("t").collect()
     assert out[0].t.hour == 16  # default_tz applied: noon EDT == 16:00 UTC
@@ -229,7 +228,6 @@ def test_datetime_default_tz_offset_format_skips_default(spark):
             )
         ],
         context=Context(spark=spark),
-        lineage_cache=False,
     )
     out = ph.run(df).select("t").collect()
     assert out[0].t.hour == 10  # noon +02:00 == 10:00 UTC, not re-shifted

@@ -2038,7 +2038,6 @@ def test_quality_gate_step_in_phase(spark):
             Q.quality_gate_step([Q.in_range("score", 0, 100), Q.row_count(at_least=2)]),
         ],
         context=Context(spark=spark),
-        lineage_cache=False,
     )
     out = ok_phase.run(df)
     assert out.filter("NOT __phaser_drop__").count() == 2
@@ -2047,7 +2046,6 @@ def test_quality_gate_step_in_phase(spark):
         name="gated_bad",
         steps=[Q.quality_gate_step([Q.in_range("score", 0, 100)])],
         context=Context(spark=spark),
-        lineage_cache=False,
     )
     with _pytest.raises(PhaserError, match="in_range"):
         bad_phase.run(df)

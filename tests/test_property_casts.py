@@ -50,7 +50,6 @@ def test_int_and_float_cast_parity(spark, values):
         name="p",
         columns=[IntColumn("s", rename=[])],
         context=Context(spark=spark),
-        lineage_cache=False,
     )
     from phaser_spark.constants import ERROR_COL
 
@@ -75,7 +74,6 @@ def test_boolean_cast_parity(spark, values):
         name="p",
         columns=[BooleanColumn("s")],
         context=Context(spark=spark),
-        lineage_cache=False,
     )
     from phaser_spark.constants import ERROR_COL
 
@@ -133,8 +131,7 @@ def test_date_cast_parity(spark, values):
         return "ERR"
 
     df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i long, s string")
-    ph = Phase(name="p", columns=[DateColumn("s")], context=Context(spark=spark),
-               lineage_cache=False)
+    ph = Phase(name="p", columns=[DateColumn("s")], context=Context(spark=spark))
     out = {r.i: (r.s, r[ERROR_COL]) for r in ph.run(df).collect()}
     for i, v in enumerate(values):
         expect = ref(v)

@@ -318,7 +318,7 @@ def test_load_data_pandas_and_dicts(spark):
         [{"x": "1", "y": "a"}, {"x": "2", "y": "b"}],
     ):
         ph = Phase(name="ld", columns=[IntColumn("x")],
-                   context=Context(spark=spark), lineage_cache=False)
+                   context=Context(spark=spark))
         ph.load_data(data)
         out = sorted((r.x, r.y) for r in ph.run().select("x", "y").collect())
         assert out == [(1, "a"), (2, "b")]

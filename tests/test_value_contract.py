@@ -1,5 +1,8 @@
 """What a Python worker hands user code, and what it hands back.
 
+The schema probe of a row step and its extra sources hand it the same
+values, read through the same row shell on the driver.
+
 A row function sees plain Python values, as in the reference's pure-Python
 rows: NaN is ``float('nan')``, null is ``None``, a ``long`` an ``int``, an
 array a ``list``, a map a ``dict``, a date a ``date`` and a timestamp a
@@ -18,7 +21,7 @@ from pyspark import cloudpickle
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from phaser_spark import Context, Phase, row_step
+from phaser_spark import Context, ExtraMapping, ExtraRecords, IntColumn, Phase, row_step
 from phaser_spark.builtin_steps import filter_rows
 from phaser_spark.constants import DROP_COL
 
@@ -140,6 +143,69 @@ def test_row_step_sampled_schema_reads_back_what_the_worker_returns(spark, value
         assert out.schema[f"{c}2"].dataType == values.schema[c].dataType, c
     copies = out.select("id", *[F.col(f"{c}2").alias(c) for c in [*cols, "ts"]])
     _assert_passed_through(values, copies, cols)
+
+
+#: what the schema probe's calls of a row function saw, on the driver
+PROBE_SAW: list = []
+
+
+def test_schema_probe_sees_the_workers_values(spark, values):
+    import warnings
+
+    PROBE_SAW.clear()
+
+    @row_step
+    def record(row):
+        PROBE_SAW.append(_view_matches(row))
+        return {**row, "seen": True}
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        # building the plan runs the probe; the workers never run here
+        _run(spark, [record], values)
+    assert PROBE_SAW == [True] * len(ROWS)
+
+
+def test_schema_probe_samples_only_rows_the_function_is_called_on(spark):
+    import warnings
+
+    # rows 1-10 come first and break the contract, so the workers never
+    # call the function on them; it returns a string there
+    @row_step
+    def tag(row):
+        return {**row, "tag": "quarantined" if row["v"] < 0 else row["id"]}
+
+    df = spark.createDataFrame(
+        [(i, -1 if i <= 10 else i) for i in range(1, 31)], "id long, v long"
+    )
+    phase = Phase(name="values", columns=[IntColumn("v", min_value=0)],
+                  steps=[tag], context=Context(spark=spark))
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        out = phase.run(df)
+    assert out.schema["tag"].dataType == T.LongType()
+    got = {r["id"]: r["tag"] for r in out.select("id", "tag").collect()}
+    assert got == {i: None if i <= 10 else i for i in range(1, 31)}
+
+
+def test_extra_sources_hold_the_rows_values(spark, values):
+    @row_step(extra_sources=["records", "ts_by_id"],
+              output_schema="records_same boolean, mapping_same boolean")
+    def compare(row, records, ts_by_id):
+        ts = ts_by_id[row["id"]]
+        row["records_same"] = _view_matches(row) and all(map(_view_matches, records))
+        row["mapping_same"] = type(ts) is type(row["ts"]) and ts == row["ts"]
+        return row
+
+    context = Context(spark=spark)
+    context.set_source(ExtraRecords("records", values))
+    context.set_source(ExtraMapping(
+        "ts_by_id", values.select(F.col("id").alias("key"), F.col("ts").alias("value"))
+    ))
+    phase = Phase(name="values", steps=[compare], context=context,
+                  extra_sources=["records", "ts_by_id"])
+    got = phase.run(values).select("records_same", "mapping_same").collect()
+    assert [tuple(r) for r in got] == [(True, True)] * len(ROWS)
 
 
 def test_python_filter_rows_sees_python_values_and_passes_them_back(spark, values):
