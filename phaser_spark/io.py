@@ -959,7 +959,21 @@ def _format_of(source: str) -> str:
     return CSV_FORMAT
 
 
-def save_any(df: DataFrame, filename: str, save_format: str) -> None:
+def save_any(
+    df: DataFrame, filename: str, save_format: str, order_by: str | None = None
+) -> None:
+    """Write ``df`` in ``save_format``; ``order_by`` writes the rows in
+    that column's order.  A single-file sink (csv/json/jsonl) already
+    writes from one task, so it sorts inside that task
+    (``coalesce(1).sortWithinPartitions``: one job, an external sort
+    that spills); a part-file directory (parquet/orc) range-sorts, which
+    adds the boundary-sample job and a shuffle but keeps the write
+    parallel."""
+    if order_by:
+        if save_format in (PARQUET_FORMAT_NAME, ORC_FORMAT_NAME):
+            df = df.sort(order_by)
+        else:
+            df = df.coalesce(1).sortWithinPartitions(order_by)
     if save_format == JSON_RECORD_FORMAT:
         save_json(df, filename)
     elif save_format == JSONL_FORMAT_NAME:

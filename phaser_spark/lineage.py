@@ -12,14 +12,17 @@ exploit the documented layout of ``monotonically_increasing_id()`` —
 partition id in the upper 31 bits, per-partition record index in the lower
 33 bits — to derive (partition, local index) with **zero shuffle**, count
 rows per partition in one small aggregate, prefix-sum those counts on
-the driver (one scalar per partition), and add the offset back via a
-broadcast join.  Total cost: one extra pass over the data, no global sort,
-no single-reducer stage.  In Spark jobs: the count costs 2 (the AQE map
-stage and the result), and every later action over the numbered plan
-pays 1 more to broadcast the offsets.
+the driver (one scalar per partition), and add the offset back as one
+constant array literal indexed by partition id.  Total cost: one extra
+pass over the data, no global sort, no single-reducer stage, no join.  In
+Spark jobs: the count costs 2 (the AQE map stage and the result); the
+offsets ride in the task binary, so later actions over the numbered plan
+pay nothing more.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -48,14 +51,22 @@ def _is_deterministic_narrow_plan(df: DataFrame) -> bool:
     #    per partition index, and equal keys land in the same range
     #    partition, so the count job and the numbering job see identical
     #    per-partition row sets even when tie order varies.
+    #  * an earlier numbering — its offsets are a folded literal, not a
+    #    join, so a renumber() on top of it sees the input's own layout
+    #    and needs no re-pinning.
     #  * broadcast-hinted Join — the stream side never shuffles, so its
-    #    row layout is exactly the (recursively checked) input's; this is
-    #    what lets a renumber() run on top of an earlier numbering's
-    #    offset join without re-pinning.
+    #    row layout is exactly the (recursively checked) input's.
     #  * monotonically_increasing_id — deterministic exactly when the
     #    partition layout is, which is what the rest of this check
     #    establishes (it is the numbering trick's own premise).
+    # A cached input (InMemoryRelation) is pinned again: when the numbered
+    # frame is itself cached (a Pipeline without working_dir caches each
+    # phase), Spark skips final-stage AQE coalescing inside the cache, so
+    # a Sort's range exchange is 1 partition in the count job and 8 in the
+    # cached numbering.  Pinning the sorted input makes both read one
+    # layout.
     unsafe = (
+        "InMemoryRelation",
         "Repartition", "RebalancePartitions", "Aggregate",
         "Window", "Sample", "Deduplicate", "Limit", "Expand", "Generate",
         "rand(", "randn(", "uuid(", "shuffle(",
@@ -131,22 +142,35 @@ def with_row_numbers(
     )
     # Rows per partition (map-side combine; result is n_partitions rows
     # on the driver): 2 Spark jobs, the AQE map stage and the result.
-    counts = sorted(
-        (r[_PID], r["cnt"])
-        for r in tagged.groupBy(_PID).agg(F.count(F.lit(1)).alias("cnt")).collect()
+    counts = dict(
+        tagged.groupBy(_PID).agg(F.count(F.lit(1)).alias("cnt")).collect()
     )
+    # offsets[pid] = first number of partition pid; a partition the counts
+    # saw empty gets null, so rows appearing there later fail the task
     offsets, running = [], start
-    for pid, cnt in counts:
-        offsets.append((pid, running))
-        running += cnt
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(offsets or [(0, start)], f"{_PID} long, __phaser_offset__ long")
-    out = (
-        tagged.join(F.broadcast(off_df), _PID, "left")
-        .withColumn(PHASER_ROW_NUM, (F.col("__phaser_offset__") + F.col(_LOCAL)).cast("long"))
-        .drop(_PID, _LOCAL, "__phaser_offset__")
+    for pid in range(max(counts, default=-1) + 1):
+        cnt = counts.get(pid)
+        offsets.append(running if cnt else None)
+        running += cnt or 0
+    # one string literal (one py4j call at any partition count) that
+    # ConstantFolding turns into an array<bigint> literal: it ships in the
+    # task binary, with no join and no broadcast job
+    table = F.from_json(F.lit(json.dumps(offsets)), "array<bigint>")
+    pid = F.col(_PID)
+    offset = F.coalesce(
+        F.try_element_at(table, (pid + 1).cast("int")),
+        F.raise_error(
+            F.concat(
+                F.lit("row numbering: partition "),
+                pid.cast("string"),
+                F.lit(" was empty or absent when its rows were counted "
+                      "(the input's partition layout changed)"),
+            )
+        ),
     )
-    return out
+    return tagged.withColumn(
+        PHASER_ROW_NUM, (offset + F.col(_LOCAL)).cast("long")
+    ).drop(_PID, _LOCAL)
 
 
 def spread_for_compute(
@@ -275,14 +299,15 @@ def number_new_rows(df: DataFrame, max_existing: int, pins: list | None = None) 
 
     Reference semantics: rows added by steps get ``max+1`` numbering
     (``phaser/records.py:60-92``, ``tests/test_record_metadata.py:63-97``).
+    The caller has already found such a row (``Phase._realign``), so no
+    second ``isEmpty`` job runs here.
     """
     if PHASER_ROW_NUM not in df.columns:
         return with_row_numbers(df, start=max_existing + 1, pins=pins)
-    has_null = df.filter(F.col(PHASER_ROW_NUM).isNull())
-    if has_null.isEmpty():
-        return df
     kept = df.filter(F.col(PHASER_ROW_NUM).isNotNull())
     fresh = with_row_numbers(
-        has_null.drop(PHASER_ROW_NUM), start=max_existing + 1, pins=pins
+        df.filter(F.col(PHASER_ROW_NUM).isNull()).drop(PHASER_ROW_NUM),
+        start=max_existing + 1,
+        pins=pins,
     )
     return kept.unionByName(fresh)

@@ -456,12 +456,10 @@ class Pipeline:
             )
             # the compute-fanout repartition (spread_for_compute) leaves the
             # checkpoint in shuffle order; the user-visible file contract is
-            # ingest order (reference behavior), so sort by the lineage
-            # column at write time — cheap relative to the write itself
-            saved = visible
-            if PHASER_ROW_NUM in saved.columns:
-                saved = saved.sort(PHASER_ROW_NUM)
-            save_any(saved, user_path, self.save_format)
+            # ingest order (reference behavior), so the sink orders by the
+            # lineage column — inside its one write task for a single file
+            order_by = PHASER_ROW_NUM if PHASER_ROW_NUM in visible.columns else None
+            save_any(visible, user_path, self.save_format, order_by=order_by)
             self.checkpoints[ph.name] = user_path
         self.save_extra_outputs()
         self.report_errors_and_warnings()

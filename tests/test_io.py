@@ -2,6 +2,7 @@
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from phaser_spark import DataException, read_csv, read_json, save_csv, save_json
 from phaser_spark.constants import PHASER_ROW_NUM
@@ -616,3 +617,61 @@ def test_zorder_key_rejects_strings_and_accepts_timestamps(spark, tmp_path):
     out = str(tmp_path / "znt")
     save_parquet_zordered(ts, out, ["v", "t"], bits=6, num_files=4)
     assert spark.read.parquet(out).count() == 200
+
+
+@pytest.mark.parametrize("fmt", ["csv", "json", "jsonl"])
+def test_user_file_in_ingest_order_in_one_job(spark, tmp_path, monkeypatch, fmt):
+    # a multi-partition source shuffled by a batch step leaves the phase
+    # checkpoint out of row-number order; the single-file sink orders it
+    # inside its one write task
+    import json
+
+    from phaser_spark import Phase, Pipeline, batch_step
+    from phaser_spark import pipeline as pipeline_mod
+
+    @batch_step
+    def shuffle(df):
+        return df.repartition(5)
+
+    sc = spark.sparkContext
+    save_jobs = {}
+    real_save_any = pipeline_mod.save_any
+
+    def counted_save_any(df, filename, *args, **kwargs):
+        group = f"user-file-{fmt}-{len(save_jobs)}"
+        sc.setJobGroup(group, "user file save")
+        try:
+            real_save_any(df, filename, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        save_jobs[os.path.basename(filename)] = len(
+            sc.statusTracker().getJobIdsForGroup(group)
+        )
+
+    monkeypatch.setattr(pipeline_mod, "save_any", counted_save_any)
+    source = spark.range(0, 240, 1, 6).select(
+        "id", F.concat(F.lit("v"), F.col("id").cast("string")).alias("v")
+    )
+    pipe = Pipeline(
+        working_dir=str(tmp_path), phases=[Phase(name="P", steps=[shuffle])], spark=spark
+    )
+    pipe.save_format = fmt
+    pipe.run(source)
+
+    path = os.path.join(str(tmp_path), f"P_output.{fmt}")
+    if fmt == "csv":
+        lines = open(path).read().splitlines()
+        assert lines[0].split(",") == [PHASER_ROW_NUM, "id", "v"]
+        rows = [ln.split(",") for ln in lines[1:]]
+        assert rows == [[str(i + 1), str(i), f"v{i}"] for i in range(240)]
+    else:
+        text = open(path).read()
+        recs = json.loads(text) if fmt == "json" else [
+            json.loads(ln) for ln in text.splitlines() if ln.strip()
+        ]
+        assert recs == [
+            {"id": i, "v": f"v{i}", PHASER_ROW_NUM: i + 1} for i in range(240)
+        ]
+    assert save_jobs[f"P_output.{fmt}"] == 1

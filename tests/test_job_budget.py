@@ -8,10 +8,41 @@ same numbers), plus the batch's output and events writes.  These tests
 pin the exact number of Spark jobs, so a change that adds a bookkeeping
 job per phase shows up here rather than in a benchmark.
 
+The 19 jobs of ``test_pipeline_run_job_budget``, by call site:
+
+* ``contract`` (8): ``io.read_csv``'s corrupt-record ``first()`` probe
+  (1); ``lineage.with_row_numbers``' per-partition count (2: its map
+  stage and its result); the ``source_copy`` write (1); the checkpoint
+  write in ``Pipeline.run_phase`` (2: the ``spread_for_compute``
+  repartition's map stage, then the write); the user-file write in
+  ``io.save_any`` (1); the events collect in ``Pipeline._report_events``
+  (1).
+* ``derive`` (3): the checkpoint write (1), the user-file write (1) and
+  the events collect (1).  Its input is the read-back checkpoint, already
+  numbered; the row step declares its schema, so no probe runs.
+* ``trim``, ``renumber=True`` (8): ``lineage.renumber``'s count over the
+  rows range-sorted by their old numbers (4: the range-boundary sample,
+  the sort's map stage, the count's map stage and its result); the
+  checkpoint write, which runs the unpinned sort again (3: sample, map
+  stage, write); the user-file write (1).  Its events frame counts 0
+  rows (the filter's drops are one driver-side summary event), so no
+  events collect runs.
+
+The 42 jobs of ``test_run_stream_job_budget`` are 14 per micro-batch, all
+inside ``run_stream``'s ``foreachBatch`` function ``process``:
+``batch_df.isEmpty()`` (1); ``with_row_numbers`` over the pinned batch
+(3: the pin's cache fill, the count's map stage and its result); the
+``contract`` phase's ``agg(...).first()`` (4: the ``spread_for_compute``
+repartition's map stage, the fill of the phase's cache, the aggregate's
+map stage and its result); the ``trim`` phase's ``agg(...).first()`` (3:
+cache fill, map stage, result); the output ``write_partition`` (1); one
+eager ``localCheckpoint`` of each phase's events (2).
+
 Changing a count deliberately: run the test, take the count from the
 failure message, check with the Spark UI or an event log which jobs
-appeared or went away, then update ``JOB_BUDGET`` or
-``STREAM_JOB_BUDGET`` and say why in CHANGES.md."""
+appeared or went away, then update ``JOB_BUDGET``,
+``STREAM_JOB_BUDGET`` or ``REALIGN_JOB_BUDGET``, the lists above, and
+say why in CHANGES.md."""
 import glob
 import os
 import shutil
@@ -19,19 +50,22 @@ import shutil
 from pyspark.sql import functions as F
 
 from phaser_spark import (
+    Context,
     DataErrorException,
     IntColumn,
     ON_ERROR_DROP_ROW,
     ON_ERROR_WARN,
     Phase,
     Pipeline,
+    batch_step,
     filter_rows,
     row_step,
 )
 from phaser_spark.constants import EVENT_DROPPED_ROW, PHASER_ROW_NUM
 
-JOB_BUDGET = 28
-STREAM_JOB_BUDGET = 48
+JOB_BUDGET = 19
+STREAM_JOB_BUDGET = 42
+REALIGN_JOB_BUDGET = 7
 
 GROUP = "phaser-job-budget"
 
@@ -89,6 +123,38 @@ def test_pipeline_run_job_budget(spark, tmp_path):
     assert jobs == JOB_BUDGET, (
         f"Pipeline.run took {jobs} Spark jobs, budget {JOB_BUDGET} "
         "(see the module docstring to change it deliberately)"
+    )
+
+
+def test_batch_step_adding_rows_job_budget(spark):
+    """A batch step that adds rows.  ``Phase.run`` numbers its input (2
+    jobs: the per-partition count's map stage and result), then
+    ``_realign`` checks once that some row has no number (1), reads the
+    existing maximum (2) and numbers the new rows (2)."""
+
+    @batch_step
+    def add_row(df):
+        new = df.sparkSession.createDataFrame(
+            [("z", None)], f"k string, {PHASER_ROW_NUM} long"
+        )
+        return df.unionByName(new)
+
+    ph = Phase(name="grow", steps=[add_row], context=Context(spark=spark))
+    src = spark.createDataFrame([("a",), ("b",)], ["k"])
+    group = "phaser-realign-budget"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "realign budget")
+    try:
+        out = ph.run(src)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    got = sorted((r["k"], r[PHASER_ROW_NUM]) for r in out.collect())
+    assert got == [("a", 1), ("b", 2), ("z", 3)]
+    assert jobs == REALIGN_JOB_BUDGET, (
+        f"Phase.run took {jobs} Spark jobs, budget {REALIGN_JOB_BUDGET}"
     )
 
 

@@ -142,12 +142,12 @@ def test_lineage_cache_skipped_for_deterministic_scans(spark):
 
 
 def test_ordered_renumber_has_no_global_window(spark):
-    # scalable renumber: range-partitioned sort + broadcast offset join,
-    # never a single-task global row_number window
+    # scalable renumber: range-partitioned sort with the offsets folded
+    # into the plan, never a single-task global row_number window
     df = entrymod.o1_sort_rank(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
-    assert "rangepartitioning" in plan and "BroadcastHashJoin" in plan
+    assert "rangepartitioning" in plan and "Join" not in plan
 
 
 def test_pii_redaction_is_shuffle_free(spark):
