@@ -126,6 +126,17 @@ def with_row_numbers(
     """
     if PHASER_ROW_NUM in df.columns:
         return df
+    return _number_rows(df, lambda: start, cache, pins)[0]
+
+
+def _number_rows(
+    df: DataFrame, start, cache: bool | None, pins: list | None
+) -> tuple[DataFrame, int]:
+    """:func:`with_row_numbers` over an unnumbered ``df``, and the number
+    of rows its per-partition count found.  ``start()`` gives the first
+    number; it is called only when that count finds rows, so a caller
+    whose start costs a read (``Pipeline.run_stream``) skips it for an
+    empty input."""
     if cache is None:
         cache = not _is_deterministic_narrow_plan(df)
     if cache:
@@ -147,7 +158,9 @@ def with_row_numbers(
     )
     # offsets[pid] = first number of partition pid; a partition the counts
     # saw empty gets null, so rows appearing there later fail the task
-    offsets, running = [], start
+    # an empty input takes no numbers, so its start is never read
+    first = start() if counts else 1
+    offsets, running = [], first
     for pid in range(max(counts, default=-1) + 1):
         cnt = counts.get(pid)
         offsets.append(running if cnt else None)
@@ -168,9 +181,10 @@ def with_row_numbers(
             )
         ),
     )
-    return tagged.withColumn(
+    numbered = tagged.withColumn(
         PHASER_ROW_NUM, (offset + F.col(_LOCAL)).cast("long")
     ).drop(_PID, _LOCAL)
+    return numbered, running - first
 
 
 def spread_for_compute(

@@ -73,6 +73,24 @@ _ERR_TYPE = "struct<type:string,column:string,step:string,message:string,policy:
 # cannot overflow a long in any real pipeline.
 _PARK_BAND = 1 << 40
 
+# Single-child logical operators that pass, drop, reorder or widen the rows
+# they read but never make one: a row number that flows through them as
+# the same attribute is one of the input's numbers (Phase._kept_numbers).
+_KEEPS_NUMBERS = frozenset({
+    "Project", "SubqueryAlias", "Filter", "Sort", "Repartition",
+    "RepartitionByExpression", "Window", "Deduplicate", "GlobalLimit",
+    "LocalLimit", "Sample",
+})
+# ...and the ones that map every row to exactly one row
+_ONE_TO_ONE = frozenset({"Project", "SubqueryAlias"})
+
+
+def _any_cached(spark, plans: list) -> bool:
+    """Whether the session's cache holds any of these logical plans."""
+    jspark = spark._jsparkSession
+    cache = jspark.sharedState().cacheManager()
+    return any(cache.lookupCachedData(jspark, p).isDefined() for p in plans)
+
 
 class TolerantDict(dict):
     """Driver dict for extra sources with string-key fallback.
@@ -632,9 +650,11 @@ class Phase:
             # preserve lineage/quarantine columns themselves — no realign —
             # so each builtin applies the same swept exclusion internally.
             is_internal = getattr(step, "__phaser_internal__", False)
+            # a renumber round's event-number stash rides along too
             state = df.select(
                 PHASER_ROW_NUM, ERROR_COL, WARNING_COL, DROP_COL,
                 DROP_STEP_COL, SWEPT_COL,
+                *([EVENT_ROW_COL] if EVENT_ROW_COL in df.columns else []),
             )
             visible = (
                 df
@@ -669,7 +689,7 @@ class Phase:
                     f"batch/dataframe step {step_name} must return a Spark "
                     f"DataFrame, got {type(out)}"
                 )
-            df = out if is_internal else self._realign(out, state)
+            df = out if is_internal else self._realign(out, state, visible)
             if self.renumber:
                 # the reference renumbers as part of EVERY batch step's
                 # postprocessing (phaser/phase.py:120-121) — internal
@@ -745,7 +765,9 @@ class Phase:
         obj.df = delta_df
         self.context.set_source(obj)
 
-    def _realign(self, out: DataFrame, state: DataFrame) -> DataFrame:
+    def _realign(
+        self, out: DataFrame, state: DataFrame, visible: DataFrame
+    ) -> DataFrame:
         """Re-attach lineage + quarantine state after a batch step
         (row-number preservation rules, phaser/records.py:63-92).
 
@@ -759,13 +781,33 @@ class Phase:
         the row state at checkpoint and would silently lose them (caught
         by randomized differential seed 17 on the user-batch-step axis:
         three cast ERROR events vanished when batch_drop_retired removed
-        the errored rows)."""
+        the errored rows).
+
+        When the step's plan shows that every output row is one of
+        ``visible``'s rows under its own number (:meth:`_kept_numbers`),
+        no probe job looks for unnumbered rows; when it shows the rows map
+        one to one, the state columns ride through the step's projections
+        and no join runs at all."""
         from .lineage import number_new_rows
 
         has_event = F.col(ERROR_COL).isNotNull() | (
             F.col(WARNING_COL).isNotNull() & (F.size(WARNING_COL) > 0)
         )
-        if PHASER_ROW_NUM not in out.columns:
+        lineage = self._kept_numbers(out, visible)
+        # A renumber=True phase keeps the join: it makes the renumber pin
+        # its sorted input (lineage._is_deterministic_narrow_plan), and an
+        # unpinned range sort with several partitions can place rows
+        # differently in the count job and the numbering job.  A cached
+        # step output keeps it too: a rebuilt plan would not read the cache.
+        if (
+            lineage is not None
+            and not self.renumber
+            and all(n.nodeName() in _ONE_TO_ONE for n in lineage)
+            and not _any_cached(out.sparkSession, lineage)
+        ):
+            joined = self._carry_state(out, lineage, state.columns[1:])
+            removed_markers = None
+        elif PHASER_ROW_NUM not in out.columns:
             # step destroyed row identity → every row is "new" and gets
             # max+1 numbers (starting at 1 would COLLIDE with the
             # re-unioned dropped rows' original numbers — two rows
@@ -781,7 +823,9 @@ class Phase:
                 ~F.col(DROP_COL) & ~F.col(SWEPT_COL) & has_event
             ).withColumn(DROP_COL, F.lit(True))
         else:
-            if not out.filter(F.col(PHASER_ROW_NUM).isNull()).isEmpty():
+            if lineage is None and not out.filter(
+                F.col(PHASER_ROW_NUM).isNull()
+            ).isEmpty():
                 mx = state.agg(F.max(PHASER_ROW_NUM)).first()[0] or 0
                 out = number_new_rows(out, mx, pins=self.context.pinned_inputs)
             joined = out.join(state, on=PHASER_ROW_NUM, how="left")
@@ -801,10 +845,75 @@ class Phase:
         # dropped AND swept rows were hidden from the step — both rejoin as
         # marker-only rows so their events / phase-failure state survive
         parked_state = state.filter(F.col(DROP_COL) | F.col(SWEPT_COL))
-        return joined.unionByName(
-            parked_state.unionByName(removed_markers),
-            allowMissingColumns=True,
+        if removed_markers is not None:
+            parked_state = parked_state.unionByName(removed_markers)
+        return joined.unionByName(parked_state, allowMissingColumns=True)
+
+    @staticmethod
+    def _kept_numbers(out: DataFrame, visible: DataFrame) -> list | None:
+        """The analyzed plan nodes from a batch step's output ``out`` down
+        to its input ``visible`` (top first, ``visible``'s own plan last),
+        when they prove that each output row is an input row under its own
+        number: ``out``'s row number is ``visible``'s attribute (not
+        re-aliased) and every node on the way is in ``_KEEPS_NUMBERS``.
+        ``None`` when the plan proves nothing (a join, union, generator or
+        aggregate, or a step output naming an internal column)."""
+        if any(c in INTERNAL_COLS for c in out.columns):
+            return None
+        target = visible._jdf.queryExecution().analyzed()
+        node = out._jdf.queryExecution().analyzed()
+        ids = []
+        for df, plan in ((out, node), (visible, target)):
+            cols = df.columns
+            if cols.count(PHASER_ROW_NUM) != 1:
+                return None
+            ids.append(plan.output().apply(cols.index(PHASER_ROW_NUM)).exprId())
+        if not ids[0].equals(ids[1]):
+            return None
+        lineage = []
+        while not node.fastEquals(target):
+            if node.nodeName() not in _KEEPS_NUMBERS or node.children().size() != 1:
+                return None
+            lineage.append(node)
+            node = node.children().apply(0)
+        return lineage + [node]
+
+    @staticmethod
+    def _carry_state(out: DataFrame, lineage: list, names: list[str]) -> DataFrame:
+        """``out`` with the state columns ``names`` of each row's input
+        row, for a step whose ``lineage`` (from :meth:`_kept_numbers`) is
+        only projections.  The projections are rebuilt over ``visible``'s
+        child, the live-row filter that still carries the internal
+        columns, each passing the state attributes through.  Columns come
+        in the left join's order: the row number, ``out``'s other columns,
+        then ``names``."""
+        jvm = out.sparkSession._jvm
+        logical = jvm.org.apache.spark.sql.catalyst.plans.logical
+        node = lineage[-1].children().apply(0)
+        output = node.output()
+        attrs = [output.apply(i) for i in range(output.size())]
+        by_name = {a.name(): a for a in attrs}
+        state = [by_name[n] for n in names]
+        for step in reversed(lineage):
+            if step.nodeName() == "Project":
+                items = step.projectList()
+                for attr in state:
+                    items = items.appended(attr)
+                node = logical.Project(items, node)
+            else:
+                node = logical.SubqueryAlias(step.identifier(), node)
+        # reorder by position: no column name is parsed (one may hold a
+        # backtick)
+        output = node.output()
+        rn = out.columns.index(PHASER_ROW_NUM)
+        order = [rn] + [i for i in range(output.size()) if i != rn]
+        node = logical.Project(
+            jvm.PythonUtils.toSeq([output.apply(i) for i in order]), node
         )
+        jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            out.sparkSession._jsparkSession, node
+        )
+        return DataFrame(jdf, out.sparkSession)
 
     # -- prune + consistency (phaser/phase.py:302-328) ---------------------
     def _prepare_for_save(self, df: DataFrame) -> DataFrame:

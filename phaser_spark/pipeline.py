@@ -64,7 +64,7 @@ from .io import (
     save_parquet_bucketed,
     save_parquet_sorted,
 )
-from .lineage import with_row_numbers
+from .lineage import _number_rows
 from .phase import Phase
 from .plan import CODEGEN_PROBE_MIN_WEIGHT, codegen_weight, warn_if_codegen_fallback
 
@@ -684,23 +684,33 @@ class Pipeline:
             )
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            if (
-                state["next_start"] is None
-                or state["last_batch"] is None
-                or batch_id <= state["last_batch"]
-            ):
-                state["next_start"] = start_for(batch_id)
+            def first_number() -> int:
+                if (
+                    state["next_start"] is None
+                    or state["last_batch"] is None
+                    or batch_id <= state["last_batch"]
+                ):
+                    state["next_start"] = start_for(batch_id)
+                return state["next_start"]
+
             # batch-scoped pin: the numbering cache is released at the end
             # of THIS foreachBatch call (the global list would grow one
             # entry per micro-batch for the stream's lifetime)
             batch_pins: list[DataFrame] = []
             caches: list[DataFrame] = []
             try:
-                df = with_row_numbers(
-                    batch_df, start=state["next_start"], cache=True, pins=batch_pins
-                )
+                if PHASER_ROW_NUM in batch_df.columns:
+                    # numbered upstream (a phaser output read as a stream)
+                    df, empty = batch_df, batch_df.isEmpty()
+                else:
+                    df, rows = _number_rows(
+                        batch_df, first_number, cache=True, pins=batch_pins
+                    )
+                    empty = rows == 0
+                # an empty batch (the numbering's count says so) writes
+                # nothing, takes no numbers and reads no start
+                if empty:
+                    return
                 # numbering high-water mark over EVERY phase's full output
                 # (dropped rows included): a row dropped in phase k is
                 # filtered out before phase k+1 runs, so the LAST phase

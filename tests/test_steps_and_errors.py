@@ -590,6 +590,37 @@ def test_batch_step_removal_keeps_recorded_events(spark):
     assert visible == {1, None}
 
 
+def test_renumber_keeps_event_row_through_later_batch_step(spark):
+    """A renumber=True phase reports an event under the row number it had
+    when it was raised (the reference records at raise time).  The first
+    batch step's renumber stashes that number; a second batch step must
+    carry the stash through its realign, not restart it from the
+    renumbered row."""
+    from phaser_spark import dataframe_step, filter_rows
+    from phaser_spark.pipeline import extract_events
+
+    @dataframe_step
+    def add_twice(df):
+        return df.withColumn("twice", F.col("qty") * 2)
+
+    src = spark.createDataFrame(
+        [(str(i), "bad" if i == 3 else str(i)) for i in range(1, 7)],
+        "id string, qty string",
+    )
+    for steps in ([filter_rows(F.col("id") != "1")],
+                  [filter_rows(F.col("id") != "1"), add_twice]):
+        ph = Phase(
+            name="R",
+            columns=[IntColumn("qty", on_error=ON_ERROR_WARN)],
+            steps=steps,
+            renumber=True,
+            context=ctx(spark),
+        )
+        evs = extract_events(ph.run(src), "R").collect()
+        warned = [e["row_num"] for e in evs if e["type"] == "WARNING"]
+        assert warned == [3], (len(steps), warned)
+
+
 def test_delta_mapping_key_normalization_and_bad_keys():
     """Counter keys: integral floats normalize to ints (3.0 and 3 name one
     counter), non-finite floats and compound keys fail loud with a
